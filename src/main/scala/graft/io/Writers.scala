@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Partitioned sinks (SURVEY §2B K1–K5).
@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * overwrite* — re-running `ymd=d` replaces exactly that partition and
   * leaves the rest of the table intact, reproducing the reference's
   * `replace=True` per-object overwrite (dags/common/s3_utils.py:7-14).
-  * Requires `spark.sql.sources.partitionOverwriteMode=dynamic`
-  * (set by GraftSession).
+  * [[writePartitioned]] sets `partitionOverwriteMode=dynamic` on the write
+  * itself, so the contract holds whatever the session's
+  * `spark.sql.sources.partitionOverwriteMode` says.
   */
 object Writers {
 
@@ -35,22 +36,31 @@ object Writers {
     * writes the header row: the reference lands `to_csv(index=False)`
     * output (yfinance_operator.py:145-146) whose first line is the
     * column names — Spark's headerless CSV default would re-read as
-    * `_c0…`, silently dropping the schema at the format boundary. */
+    * `_c0…`, silently dropping the schema at the format boundary. The
+    * dynamic overwrite mode is a write option: under the static mode an
+    * overwrite would first delete every partition of the table. */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String,
                        format: String = "json"): Unit =
     serialized(path) {
       val w = df.write
         .mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partitionCol)
         .format(format)
       (if (format == "csv") w.option("header", "true") else w).save(path)
     }
 
   /** K1 single-partition form: tag the partition value then dynamic-
-    * overwrite — the common `runFor(date)` write. */
+    * overwrite — the common `runFor(date)` write. Returns the rows
+    * written, counted by an Observation on the write's own job (no second
+    * scan); zero rows replace no partition, so nothing lands. */
   def writeForDate(df: DataFrame, path: String, ymd: String,
-                   format: String = "json"): Unit =
-    writePartitioned(df.withColumn("ymd", lit(ymd)), path, "ymd", format)
+                   format: String = "json"): Long = {
+    val written = Observation() // fresh name per call: one per write
+    writePartitioned(df.observe(written, count(lit(1)).as("rows"))
+      .withColumn("ymd", lit(ymd)), path, "ymd", format)
+    written.get("rows").asInstanceOf[Long]
+  }
 
   /** K3: silver parquet overwrite (industry_code_glue_job.py:53-66). */
   def writeSilver(df: DataFrame, path: String): Unit =

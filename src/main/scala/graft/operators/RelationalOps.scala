@@ -100,13 +100,6 @@ object RelationalOps {
   def tagLit(df: DataFrame, name: String, value: String): DataFrame =
     df.withColumn(name, lit(value))
 
-  /** F17: non-empty assertion (data-quality gate; e.g. tasks.py:61-62).
-    * `limit(1)` probe, not `count()` — O(first partition), not a full scan. */
-  def assertNonEmpty(df: DataFrame, what: String): DataFrame = {
-    require(!df.isEmpty, s"data-quality gate: $what returned no rows")
-    df
-  }
-
   /** F9: group-by-day regroup (bonds extractors.py:53-95) — a `ymd` column
     * derived from the leading 10 chars of an ISO timestamp string; the
     * "grouping" is the shuffle implied by a partitioned write on it. */

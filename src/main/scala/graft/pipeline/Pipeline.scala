@@ -2,16 +2,18 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 import graft.io.{Layout, PartitionLedger, SchemaRegistry, Writers}
-import graft.operators.{CalendarOps, RelationalOps}
+import graft.operators.CalendarOps
 import graft.sources.{Connector, Retry}
 
 /** Pipeline layer (SURVEY §2D C1–C7 + §3 lifecycles E1–E3): the
   * reference's Airflow DAG semantics as plain Scala around Spark jobs.
   *
   * - C1 short-circuit: the market-open *decision query* runs on the
-  *   engine (F6 over dim_calendar); a holiday yields Skipped without
-  *   touching the source.
+  *   engine (F6 over dim_calendar) once per calendar snapshot, and every
+  *   ingest on that calendar reads its collected answer; a holiday yields
+  *   Skipped without touching the source.
   * - C2 branch: SchemaRegistry.ensure infers a schema only on first run.
   * - C3 backfill idempotence: every bronze write is a dynamic partition
   *   overwrite of exactly `ymd=d`; `runRange` + PartitionLedger gives
@@ -26,8 +28,6 @@ case object Ran extends StageResult
 case class Skipped(reason: String) extends StageResult
 case class Failed(error: Throwable) extends StageResult
 
-/** E1: bronze ingest job — decision query, fetch w/ retry, non-empty
-  * gate, idempotent partitioned bronze write, ledger mark. */
 final class SensorTimeoutException(msg: String) extends RuntimeException(msg)
 
 /** S17's full sensor contract — the reference's S3KeySensor runs with
@@ -63,6 +63,9 @@ object Sensor {
   }
 }
 
+/** E1: bronze ingest job — decision query, fetch w/ retry, idempotent
+  * partitioned bronze write gated non-empty, ledger mark. A daily
+  * `runFor` on an already-decided calendar runs one Spark job: the write. */
 final class IngestJob(
     spark: SparkSession,
     layout: Layout,
@@ -76,17 +79,7 @@ final class IngestJob(
     * get_workday_info → verify_market_open, brz_kr_etf_daily.py:21-33,
     * tasks.py:13-27). Returns None when `date` is a holiday. */
   def previousWorkingDay(date: String): Option[String] =
-    calendar.flatMap { cal =>
-      val row = CalendarOps.previousWorkingDay(cal)
-        .filter(col("date") === lit(date))
-        .select(col("is_market_holiday"),
-          col("previous_working_day").cast("string"))
-        .collect().headOption
-      row match {
-        case Some(r) if !r.getBoolean(0) => Option(r.getString(1))
-        case _ => None
-      }
-    }
+    calendar.flatMap(cal => IngestJob.decisions(cal).getOrElse(date, None))
 
   def runFor(date: String): StageResult = {
     if (ledger.isProcessed(connector.name, date))
@@ -96,19 +89,44 @@ final class IngestJob(
     try {
       val raw = Retry.withRetries(retries)(connector.fetchRaw(date))
       if (raw.isEmpty) return Skipped(s"no payload for $date")
-      val bronze = RelationalOps.assertNonEmpty(
-        connector.toBronze(spark, raw), connector.name)
-      Writers.writeForDate(bronze,
+      // F17 data-quality gate, counted on the write itself: a dynamic
+      // overwrite of zero rows replaces no partition, so an empty payload
+      // lands nothing and the ledger stays unmarked
+      val rows = Writers.writeForDate(connector.toBronze(spark, raw),
         layout.source("bronze", connector.name), date, format)
+      require(rows > 0, s"data-quality gate: ${connector.name} returned no rows")
       ledger.markProcessed(connector.name, date)
       Ran
-    } catch { case e: Throwable => Failed(e) }
+    } catch { case NonFatal(e) => Failed(e) }
   }
 
   /** C3: resumable backfill over a date range. */
   def runRange(dates: Seq[String]): Map[String, StageResult] =
     ledger.unprocessed(connector.name, dates)
       .map(d => d -> runFor(d)).toMap
+}
+
+object IngestJob {
+  /** Collected C1 decisions, one table per calendar `DataFrame`: date →
+    * previous working day, None on a holiday. The answer is the same for
+    * every source of a day, and callers such as [[Runner]] build a fresh
+    * IngestJob per source, so the table lives here. Keys are weak and
+    * compared by identity (Dataset keeps Object equality): a re-read or
+    * re-derived calendar (e.g. after `CalendarOps.applyHolidays`) is a new
+    * key with its own decision. `computeIfAbsent` on the synchronized map
+    * runs the query once per calendar even when threads ask at once. */
+  private val decided = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, Map[String, Option[String]]]())
+
+  private[pipeline] def decisions(cal: DataFrame): Map[String, Option[String]] =
+    decided.computeIfAbsent(cal, c =>
+      CalendarOps.previousWorkingDay(c)
+        .select(col("date").cast("string"), col("is_market_holiday"),
+          col("previous_working_day").cast("string"))
+        .collect().map { r =>
+          val open = !r.isNullAt(1) && !r.getBoolean(1)
+          r.getString(0) -> (if (open) Option(r.getString(2)) else None)
+        }.toMap)
 }
 
 /** E2: silver conformance job — availability check (S17), schema-registry
@@ -163,7 +181,7 @@ final class SilverIndustryCodeJob(
         case None      => Writers.warehouseFullRefresh(stamped, "dim_industry_code")
       }
       Ran
-    } catch { case e: Throwable => Failed(e) }
+    } catch { case NonFatal(e) => Failed(e) }
   }
 }
 
@@ -214,7 +232,7 @@ final class CalendarJob(spark: SparkSession, layout: Layout) {
       val dim = CalendarOps.calendarDim(spark, target, target)
       Writers.writeYearPartition(CalendarOps.withAudit(dim), path)
       Ran
-    } catch { case e: Throwable => Failed(e) }
+    } catch { case NonFatal(e) => Failed(e) }
 
   def read(): DataFrame = spark.read.parquet(path)
 }

@@ -30,13 +30,15 @@ trait Connector {
 /** C4: connector-level retry with delay — the reference's
   * `retries/retry_delay` default_args (brz_kr_etf_daily.py:36-38). */
 object Retry {
+  /** Fatal errors and interrupts (not `NonFatal`) propagate at once,
+    * without a retry. */
   def withRetries[T](attempts: Int, delayMs: Long = 0)(f: => T): T = {
     var last: Throwable = null
     var i = 0
     while (i < attempts) {
       try return f
       catch {
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           last = e; i += 1
           if (i < attempts && delayMs > 0) Thread.sleep(delayMs)
       }

@@ -60,14 +60,6 @@ class RelationalOpsSpec extends SparkSpec {
     assert(out === "issue_date")
   }
 
-  test("assertNonEmpty gates empty frames (F17)") {
-    val ok = Seq(1).toDF("x")
-    assert(RelationalOps.assertNonEmpty(ok, "ok").count() === 1)
-    intercept[IllegalArgumentException] {
-      RelationalOps.assertNonEmpty(ok.filter($"x" > 1), "empty")
-    }
-  }
-
   test("withYmd derives partition key from ISO timestamp string (F9)") {
     val out = RelationalOps.withYmd(
       Seq("2024-03-05T10:00:00").toDF("ts"), "ts")

@@ -4,8 +4,23 @@ import graft.SparkSpec
 import graft.io.{Layout, PartitionLedger, SchemaRegistry, Writers, Readers}
 import graft.model.Schemas
 import graft.sources._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Every file under a lake directory, name → bytes: two snapshots are
+  * equal iff the directory is byte-identical. */
+object LakeFiles {
+  def snapshot(dir: String): Map[String, Seq[Byte]] = {
+    val root = Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq)
+      .toMap
+    finally walk.close()
+  }
+}
 
 class WritersSpec extends SparkSpec {
   import spark.implicits._
@@ -24,6 +39,23 @@ class WritersSpec extends SparkSpec {
     assert(out.count() === 2)
     assert(out.filter($"ymd" === "2025-01-01").select($"k").as[String].head() === "a2")
     assert(out.filter($"ymd" === "2025-01-02").count() === 1)
+  }
+
+  test("C3: the bronze write stays a dynamic overwrite under a static session conf") {
+    val path = Files.createTempDirectory("graft-io").toString + "/bronze/t"
+    Writers.writeForDate(Seq(("a", 1)).toDF("k", "v"), path, "2025-01-01", "parquet")
+    Writers.writeForDate(Seq(("b", 2)).toDF("k", "v"), path, "2025-01-02", "parquet")
+    val day2 = LakeFiles.snapshot(s"$path/ymd=2025-01-02")
+    // the same write from a session whose default would wipe the table
+    val static = spark.newSession()
+    static.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    val rerun = static.createDataFrame(Seq(("a2", 9))).toDF("k", "v")
+    assert(Writers.writeForDate(rerun, path, "2025-01-01", "parquet") === 1)
+    assert(LakeFiles.snapshot(s"$path/ymd=2025-01-02") === day2,
+      "the other day's partition must keep its exact files")
+    val out = spark.read.parquet(path)
+    assert(out.filter($"ymd" === "2025-01-01").select($"k").as[String]
+      .collect().toSeq === Seq("a2"))
   }
 
   test("idempotence: running the same write twice == once (C3 invariant)") {
@@ -347,6 +379,162 @@ class JobsSpec extends SparkSpec {
     assert(job.runFor("2025-01-06") === Skipped("already processed 2025-01-06"))
     // missing fixture date (a weekday) -> no payload skip
     assert(job.runFor("2025-01-07") === Skipped("no payload for 2025-01-07"))
+  }
+
+  /** The kr_etf fixture plus 2025-01-07 whose only page parses to zero rows. */
+  private def krEtfWithEmptyDay(): String = {
+    val dir = Files.createTempDirectory("graft-fx").resolve("kr_etf")
+    val day = dir.resolve("ymd=2025-01-06")
+    Files.createDirectories(day)
+    val src = Paths.get(fixture("kr_etf"), "ymd=2025-01-06")
+    val pages = Files.list(src)
+    try pages.iterator().asScala.foreach(p => Files.copy(p, day.resolve(p.getFileName)))
+    finally pages.close()
+    val empty = dir.resolve("ymd=2025-01-07")
+    Files.createDirectories(empty)
+    Files.writeString(empty.resolve("page_1.json"), """{"totalCount":0,"items":[]}""")
+    dir.toString
+  }
+
+  /** `runFor` off the test thread, failing the test if it does not return. */
+  private def boundedRunFor(job: IngestJob, date: String): StageResult = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    Await.result(Future(job.runFor(date))(ExecutionContext.global), 2.minutes)
+  }
+
+  private def assertGateFailed(res: StageResult, source: String): Unit = res match {
+    case Failed(e: IllegalArgumentException) =>
+      assert(e.getMessage.contains(s"data-quality gate: $source returned no rows"))
+    case other => fail(s"expected the non-empty gate to fail, got $other")
+  }
+
+  test("F17 gate on the write: an empty payload fails, lands no partition, marks nothing") {
+    val fx = krEtfWithEmptyDay()
+    val layout = freshLayout()
+    val ledger = new PartitionLedger(layout.root + "/ledger.tsv")
+    val job = new IngestJob(spark, layout, new KrEtfConnector(fx), ledger)
+    val table = layout.source("bronze", "kr_etf")
+    assert(job.runFor("2025-01-06") === Ran)
+    val landed = LakeFiles.snapshot(s"$table/ymd=2025-01-06")
+    assertGateFailed(boundedRunFor(job, "2025-01-07"), "kr_etf")
+    assert(!ledger.isProcessed("kr_etf", "2025-01-07"))
+    assert(!Files.exists(Paths.get(s"$table/ymd=2025-01-07")))
+    assert(LakeFiles.snapshot(s"$table/ymd=2025-01-06") === landed,
+      "an empty payload must leave the earlier day byte-identical")
+    // on a fresh lake the empty day lands no partition at all
+    val fresh = freshLayout()
+    val freshLedger = new PartitionLedger(fresh.root + "/ledger.tsv")
+    assertGateFailed(boundedRunFor(
+      new IngestJob(spark, fresh, new KrEtfConnector(fx), freshLedger),
+      "2025-01-07"), "kr_etf")
+    assert(!freshLedger.isProcessed("kr_etf", "2025-01-07"))
+    val tableEntries = Option(new java.io.File(fresh.source("bronze", "kr_etf")).list())
+    assert(tableEntries.toSeq.flatten.filter(_.startsWith("ymd=")) === Nil)
+  }
+
+  /** A connector whose fetch always throws `fault()`, counting attempts. */
+  private final class FaultyConnector(fault: () => Throwable) extends Connector {
+    val name = "faulty"
+    var fetches = 0
+    def fetchRaw(logicalDate: String): Seq[String] = { fetches += 1; throw fault() }
+    def toBronze(spark: SparkSession, raw: Seq[String]): DataFrame =
+      fail("a failed fetch has no payload to parse")
+  }
+
+  test("C4: NonFatal fetch errors retry then fail; interrupts and fatal errors propagate at once") {
+    val layout = freshLayout()
+    val ledger = new PartitionLedger(layout.root + "/ledger.tsv")
+    val flaky = new FaultyConnector(() => new java.io.IOException("connection reset"))
+    new IngestJob(spark, layout, flaky, ledger, retries = 3).runFor("2025-01-06") match {
+      case Failed(e: java.io.IOException) => assert(e.getMessage === "connection reset")
+      case other => fail(s"expected Failed(IOException), got $other")
+    }
+    assert(flaky.fetches === 3)
+    val fatal = Seq[() => Throwable](
+      () => new InterruptedException("interrupted"),
+      () => new OutOfMemoryError("injected"))
+    for (f <- fatal) {
+      val c = new FaultyConnector(f)
+      val thrown = intercept[Throwable] {
+        new IngestJob(spark, layout, c, ledger, retries = 3).runFor("2025-01-06")
+      }
+      assert(thrown.getClass === f().getClass)
+      assert(c.fetches === 1, s"${thrown.getClass.getSimpleName} must not be retried")
+    }
+    assert(!ledger.isProcessed("faulty", "2025-01-06"))
+  }
+
+  /** Spark jobs that `body` starts on this thread, counted once the
+    * listener bus has delivered every event. */
+  private def jobsIn(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    started.get
+  }
+
+  test("C1 once per calendar: 13 ingests decide once, a decided daily runFor is one Spark job") {
+    val cal = graft.operators.CalendarOps.calendarDim(spark, 2025, 2025)
+    val jobs = (1 to 13).map { _ =>
+      val layout = freshLayout()
+      val job = new IngestJob(spark, layout, new KrEtfConnector(fixture("kr_etf")),
+        new PartitionLedger(layout.root + "/ledger.tsv"), calendar = Some(cal))
+      var res: StageResult = null
+      val n = jobsIn { res = job.runFor("2025-01-06") }
+      assert(res === Ran)
+      n
+    }
+    assert(jobs.tail.forall(_ == 1), s"Spark jobs per ingest: $jobs")
+    // the first ingest paid the decision query (and only once) + the write
+    val decision = jobsIn(IngestJob.decisions(
+      graft.operators.CalendarOps.calendarDim(spark, 2025, 2025)))
+    assert(decision >= 1 && jobs.head === decision + 1, s"Spark jobs per ingest: $jobs")
+  }
+
+  /** Delegates to `c`, counting fetches. */
+  private final class CountingConnector(c: Connector) extends Connector {
+    val name = c.name
+    var fetches = 0
+    def fetchRaw(logicalDate: String): Seq[String] = { fetches += 1; c.fetchRaw(logicalDate) }
+    def toBronze(spark: SparkSession, raw: Seq[String]): DataFrame = c.toBronze(spark, raw)
+  }
+
+  test("C1: a calendar re-derived with an extra holiday gets its own decision") {
+    import graft.operators.CalendarOps
+    val cal = CalendarOps.calendarDim(spark, 2025, 2025)
+    val layout = freshLayout()
+    val ledger = new PartitionLedger(layout.root + "/ledger.tsv")
+    val source = new CountingConnector(new KrEtfConnector(fixture("kr_etf")))
+    val before = new IngestJob(spark, layout, source, ledger, calendar = Some(cal))
+    assert(before.previousWorkingDay("2025-01-07") === Some("2025-01-06"))
+    // holiday short-circuit: skipped before any fetch
+    assert(before.runFor("2025-01-05") === Skipped("2025-01-05 is a market holiday"))
+    assert(source.fetches === 0)
+    val withHoliday = CalendarOps.applyHolidays(cal,
+      Seq("2025-01-06").toDF("locdate"), "locdate")
+    val after = new IngestJob(spark, layout, source, ledger,
+      calendar = Some(withHoliday))
+    assert(after.previousWorkingDay("2025-01-07") === Some("2025-01-03"))
+    assert(after.runFor("2025-01-06") === Skipped("2025-01-06 is a market holiday"))
+    assert(source.fetches === 0)
+    // the original calendar keeps its own decision
+    assert(before.runFor("2025-01-06") === Ran)
+    assert(source.fetches === 1)
   }
 
   test("S21 kr_etf_old: distinct output payload parses; empty output raises") {

@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Test access to the driver's listener bus: blocks until every event
+  * posted so far has reached every listener, so a listener's counts are
+  * final once this returns. */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
