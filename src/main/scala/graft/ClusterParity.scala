@@ -110,12 +110,7 @@ object ClusterParity {
 
   private def runLeg(master: String, names: Seq[String], sfDir: String,
                      extra: Map[String, String]): Map[String, (Long, String)] = {
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val b = graft.core.GraftSession.builder(master, 8)
     extra.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,12 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-capture tool for the optimization rounds: writes
   * `.explain("formatted")` output for each named registry query to
   * `<outDir>/<name>.txt` — the before/after plan evidence the round
-  * deliverables require. Runs under the SAME session config as Bench
-  * (master/local[$SPARK_GRAFT_CPUS], shuffle.partitions, AQE) so the
+  * deliverables require. Runs under the SAME session as Bench
+  * ([[graft.core.GraftSession]], local[$SPARK_GRAFT_CPUS]) so the
   * captured plan is the one the bench actually executes. Plan-only: no
   * query is executed (AQE plans print `isFinalPlan=false`; the shape —
   * Exchange count, join strategy, PushedFilters, ReadSchema — is what the
@@ -19,14 +19,7 @@ object PlanDump {
     val Array(sfDir, outDir) = args.take(2)
     val names = if (args.length > 2) args.drop(2).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>

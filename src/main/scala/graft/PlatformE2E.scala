@@ -17,13 +17,8 @@ object PlatformE2E {
   def main(args: Array[String]): Unit = {
     val fixtures = args.headOption.getOrElse(
       "/root/repo/src/test/resources/bronze")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-platform-e2e")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.core.GraftSession
+      .builder(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"), 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

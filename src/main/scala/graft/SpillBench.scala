@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Memory-pressure evidence: runs the heaviest registry queries under a
   * DELIBERATELY constrained heap and reports whether the hash-agg / sort
@@ -19,18 +19,11 @@ import org.apache.spark.sql.SparkSession
 object SpillBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "target/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "pipeline_training_corpus", "pipeline_semdedup_embeddings",
       "dedup_cluster_sizes", "dedup_keep_best_quality",
       "dedup_containment_bottomk")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // per-query accumulation via a listener: task metrics are the same

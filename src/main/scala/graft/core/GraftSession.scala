@@ -2,7 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the engine.
+/** Session factory for the engine — every session graft builds (the
+  * mains, the test suite, the benchmark) starts here, so what ships, what
+  * is oracle-checked and what is benchmarked run one posture.
   *
   * Scale posture (SURVEY.md §4): AQE on (runtime coalesce + skew-join
   * handling), dynamic partition overwrite (idempotent per-partition
@@ -13,9 +15,22 @@ import org.apache.spark.sql.SparkSession
   * coalesces down.
   */
 object GraftSession {
-  def builder(master: String = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"),
-              shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      : SparkSession.Builder =
+  /** `SPARK_GRAFT_CPUS` parsed: a positive integer as given, the JVM's
+    * available processors when unset; anything else fails fast — the value
+    * lands in `local[n]`, `shuffle.partitions`, Bench's JSON line and its
+    * artifact name, none of which may carry garbage. */
+  def parseCpus(raw: Option[String]): Int = raw match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
+  /** The local thread and shuffle-partition count (`SPARK_GRAFT_CPUS`). */
+  lazy val cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  def builder(master: String = s"local[$cpus]",
+              shufflePartitions: Int = cpus): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -34,10 +49,4 @@ object GraftSession {
       // DedupOps.bloomDeltaNew) — plan-asserted in PlanQualitySpec
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.ui.enabled", "false")
-
-  def get(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

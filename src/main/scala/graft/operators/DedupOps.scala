@@ -146,23 +146,12 @@ object DedupOps {
     * rarity order, with their 1-based rank `rn` — the shared prefix
     * selection behind [[jaccardPairs]] and [[containmentPairs]].
     *
-    * DEPLOYED as the `row_number()` window — the r15 round built the
-    * bounded-heap partial-aggregate challenger ([[rarestPrefixesAgg]] /
-    * [[graft.functions.BottomKRarestAgg]], the "native codegen'd
-    * bounded-heap" lane the r14 typed-Aggregator refutation left open)
-    * and REFUTED it by measurement at BOTH sf0.1 and sf1 (Opt15Probe,
-    * min-of-3, identical outputs): stage-isolated, agg loses 0.79×/0.82×
-    * at both scales. Why the theory fails: ObjectHashAggregateExec falls
-    * back to SORT-based aggregation past 128 groups per partition —
-    * every realistic corpus — so the "no sort" claim evaporates (the
-    * partial stage sorts the same posting rows the window sorts, then
-    * pays interpreted per-row heap updates on top), and the genuine
-    * shuffle-row reduction (256k→28k rows at t=0.9) is worth less than
-    * the CPU constant even at 10× data. Raising the fallback threshold
-    * recovers parity at sf0.1 but LOSES at sf1 (hash-map pressure) and
-    * is memory-unsafe at 100 TB. The challenger stays committed and
-    * property-pinned (PropertySpec "rarest-prefix bounded-heap") as the
-    * refutation record. */
+    * A `row_number()` window. A bounded-heap partial aggregate was
+    * measured against it in r15 and lost 0.79×/0.82× at sf0.1 and sf1
+    * (OPTIMIZATION_r15.md): ObjectHashAggregateExec falls back to
+    * sort-based aggregation past 128 groups per partition — every
+    * realistic corpus — so the partial stage sorts the same posting rows
+    * the window sorts and pays interpreted per-row heap updates on top. */
   private[graft] def rarestPrefixes(posting: DataFrame,
                                     prefixLen: Column): DataFrame = {
     val freq = posting.groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -171,22 +160,6 @@ object DedupOps {
       .withColumn("rn", row_number().over(byRarity))
       .filter(col("rn") <= prefixLen)
       .select(col("id"), col("sz"), col("rn"), col("h"))
-  }
-
-  /** The REFUTED bounded-heap aggregate challenger (see
-    * [[rarestPrefixes]]) — kept with its property pin and Opt15AB/
-    * Opt15Probe evidence so the next round doesn't re-litigate it
-    * without new reasons. */
-  private[graft] def rarestPrefixesAgg(posting: DataFrame,
-                                       prefixLen: Column): DataFrame = {
-    val freq = posting.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    posting.join(freq, "h")
-      .groupBy(col("id"), col("sz"))
-      .agg(graft.functions.BottomKRarest(col("df"), col("h"),
-        prefixLen.cast("int")).as("pfx"))
-      .select(col("id"), col("sz"), posexplode(col("pfx")))
-      .select(col("id"), col("sz"), (col("pos") + 1).cast("int").as("rn"),
-        col("col").as("h"))
   }
 
   /** Exact set-similarity join with PPJoin-style prefix filtering: under
@@ -579,7 +552,7 @@ object DedupOps {
     // exchange, i.e. single-task on a single-split input — the order
     // invertedIndexPairs already uses. Same rows, same one exchange,
     // comparable shuffle bytes (raw text vs hash arrays); A/B 1.11–1.13×
-    // on dedup_containment_bottomk (Opt15AB bottomk_repart_first).
+    // on dedup_containment_bottomk (OPTIMIZATION_r15.md).
     val sets = docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol).as("id"),

@@ -65,7 +65,7 @@ object ProfileOps {
     * No stage sorts or holds a whole group in one task — the r13-watch
     * windowed form (`Window.partitionBy(group)`) put each group in a
     * single partition and was quietly the same scale ceiling as the
-    * aggregate; this replaces it (round 14, measured in `ClawbackAB`).
+    * aggregate; this replaces it (round 14, measured in NOTES_r14.md).
     *
     * The interpolation replicates
     * `catalyst.expressions.aggregate.Percentile.getPercentile` op for op
@@ -78,7 +78,7 @@ object ProfileOps {
     * as the aggregate's eval does. Returns one row per group:
     * (groupCol, <name per requested percentile>), unrounded.
     *
-    * Constants note (ClawbackAB, min-of-3, one JVM): at sf0.1/1/10 on
+    * Constants note (NOTES_r14.md, min-of-3, one JVM): at sf0.1/1/10 on
     * the synthetic corpus — whose distinct-value count does NOT grow
     * with SF — the plain aggregate wins (1.06 s vs the old windowed
     * form's 1.32 s at sf0.1), so `stats_percentiles` deploys the

@@ -77,14 +77,20 @@ final class IngestJob(
 
   /** C1: previous-working-day decision (the reference's
     * get_workday_info → verify_market_open, brz_kr_etf_daily.py:21-33,
-    * tasks.py:13-27). Returns None when `date` is a holiday. */
+    * tasks.py:13-27). Returns None when `date` is a holiday, and when the
+    * calendar holds no working day before it. */
   def previousWorkingDay(date: String): Option[String] =
-    calendar.flatMap(cal => IngestJob.decisions(cal).getOrElse(date, None))
+    calendar.flatMap(cal => IngestJob.decisions(cal).get(date).flatten)
+
+  /** Open or closed from `is_market_holiday` alone: a date outside the
+    * calendar counts as closed, and no calendar means always open. */
+  private def marketOpen(date: String): Boolean =
+    calendar.forall(cal => IngestJob.decisions(cal).contains(date))
 
   def runFor(date: String): StageResult = {
     if (ledger.isProcessed(connector.name, date))
       return Skipped(s"already processed $date")
-    if (calendar.isDefined && previousWorkingDay(date).isEmpty)
+    if (!marketOpen(date))
       return Skipped(s"$date is a market holiday")
     try {
       val raw = Retry.withRetries(retries)(connector.fetchRaw(date))
@@ -107,8 +113,9 @@ final class IngestJob(
 }
 
 object IngestJob {
-  /** Collected C1 decisions, one table per calendar `DataFrame`: date →
-    * previous working day, None on a holiday. The answer is the same for
+  /** Collected C1 decisions, one table per calendar `DataFrame`, keyed by
+    * the OPEN dates only: date → previous working day (None when the
+    * calendar has no earlier working day). The answer is the same for
     * every source of a day, and callers such as [[Runner]] build a fresh
     * IngestJob per source, so the table lives here. Keys are weak and
     * compared by identity (Dataset keeps Object equality): a re-read or
@@ -123,9 +130,8 @@ object IngestJob {
       CalendarOps.previousWorkingDay(c)
         .select(col("date").cast("string"), col("is_market_holiday"),
           col("previous_working_day").cast("string"))
-        .collect().map { r =>
-          val open = !r.isNullAt(1) && !r.getBoolean(1)
-          r.getString(0) -> (if (open) Option(r.getString(2)) else None)
+        .collect().collect { case r if !r.isNullAt(1) && !r.getBoolean(1) =>
+          r.getString(0) -> Option(r.getString(2))
         }.toMap)
 }
 

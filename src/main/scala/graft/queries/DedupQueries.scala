@@ -471,7 +471,7 @@ object DedupQueries {
         // NL join + overlap kernel) has no trailing exchange, so the
         // orderBy's range-sampling pass would re-run the whole N² kernel;
         // fenced, sampling re-reads the (tiny) materialized pair set
-        // (A/B OptAB r14: 1.30× at sf0.1)
+        // (OPTIMIZATION_r14.md A/B: 1.30× at sf0.1)
         .repartition(s.sparkContext.defaultParallelism)
         .orderBy($"id_a", $"id_b")
     },

@@ -83,7 +83,7 @@ object GoldQueries {
       // dispatch dedup_components deploys): above the ~10k-doc crossover
       // it IS the PPJoin prefix index (the 100 TB form); below it the
       // dense merge kernel wins on constants. Branches are property-
-      // tested identical, so survivors never change — A/B OptAB r14:
+      // tested identical, so survivors never change — OPTIMIZATION_r14.md:
       // 1.75× at sf0.1 (the quality-gated corpus sits under the
       // crossover there)
       val nearDupLosers = graft.operators.DedupOps

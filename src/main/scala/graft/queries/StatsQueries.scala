@@ -86,7 +86,7 @@ object StatsQueries {
     headline = true)
 
   /** Exact interpolated percentiles via the `percentile` aggregate — the
-    * MEASURED-cheapest exact form at every tested SF (ClawbackAB,
+    * MEASURED-cheapest exact form at every tested SF (NOTES_r14.md,
     * min-of-3, one JVM: aggregate 1.06 s vs the r14-draft rewrite's
     * 1.32 s at sf0.1; it also wins at sf1/sf10 because this corpus's
     * distinct-value count does not grow with SF, so the aggregate's
@@ -833,7 +833,7 @@ object StatsQueries {
     * sf1 (1.60×/1.04×/0.73× across three contended runs) — the same
     * lesson as the r15 bounded-heap refutation: ObjectHashAggregate's
     * interpreted per-row collect path costs more than the codegen'd SMJ
-    * machinery it removes. Evidence: Opt15AB basket_collect_pairs
+    * machinery it removes. Evidence: OPTIMIZATION_r15.md
     * (exceptAll-identical) + plans/r15/stats_basket_lift_*. */
   private val basket = Q(
     "stats_basket_lift",

@@ -22,7 +22,7 @@ object TextQueries {
   // heavy regex/hash columns ABOVE the sort: the range partitioner's
   // sampling pass evaluates the plan below the sort over every row, so
   // expressions placed below an orderBy run TWICE (the f1_conform lesson,
-  // measured 1.5× in ClawbackAB). The sort row carries the raw text
+  // measured 1.5×, NOTES_r14.md). The sort row carries the raw text
   // instead of the derived columns — at presentation-sort volumes that
   // trade is strictly cheaper than double-running the regex engine.
   private val tokenStats = Q(
@@ -292,7 +292,7 @@ object TextQueries {
       val dirty = concat(lit("  "), upper(substring($"text", 1, 12)),
         lit("\t"), $"text", lit(" \u00A0 "))
       // sort first, normalize after (house text_* rule): three regex
-      // pipelines below the orderBy would run twice \u2014 A/B OptAB r14:
+      // pipelines below the orderBy would run twice \u2014 OPTIMIZATION_r14.md:
       // 1.22\u00D7 at sf0.1
       t(s, dir).documents.select($"doc_id", $"text")
         .orderBy($"doc_id")
@@ -700,7 +700,7 @@ object TextQueries {
       import s.implicits._
       // sort first, classify after (the house text_* rule, header comment
       // above): the per-gram md5 fold below the orderBy would run twice
-      // (range-sampling pass + sort input) — A/B OptAB r14: 1.64× at sf0.1
+      // (range-sampling pass + sort input) — OPTIMIZATION_r14.md: 1.64× at sf0.1
       t(s, dir).documents.select($"doc_id", $"text")
         .orderBy($"doc_id")
         .select($"doc_id",

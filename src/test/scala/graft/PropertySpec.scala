@@ -513,36 +513,4 @@ class PropertySpec extends SparkSpec {
       }
     }
   }
-
-  test("rarest-prefix bounded-heap aggregate ≡ window twin: same (id, sz, " +
-       "rn, h) rows on random postings and thresholds") {
-    // pins the r15 BottomKRarestAgg CHALLENGER (A/B-refuted on cost, kept
-    // committed — see DedupOps.rarestPrefixes scaladoc) against the
-    // deployed row_number() window: identical kept rows WITH their ranks
-    // — including ties in df (broken by h), prefixLen ≥ group size (keep
-    // all), and prefixLen = 1
-    import org.apache.spark.sql.functions.{ceil => sqlCeil}
-    val doc = Gen.choose(1, 24).flatMap(n =>
-      Gen.listOfN(n, Gen.choose(0L, 14L))).map(_.distinct)
-    val corpus = Gen.listOfN(10, doc)
-    forAll(corpus, n = 6) { docsList =>
-      val sets = docsList.zipWithIndex
-        .map { case (s, i) => (i.toLong, s.sorted) }
-        .toDF("id", "s")
-        .select($"id", $"s", size($"s").as("sz"))
-        .filter($"sz" > 0)
-      val posting = sets.select($"id", $"sz", explode($"s").as("h"))
-      for (t <- Seq(0.3, 0.5, 0.9, 1.0)) {
-        val prefixLen = $"sz" - sqlCeil(lit(t) * $"sz" - 1e-9) + 1
-        def rows(d: org.apache.spark.sql.DataFrame) =
-          d.select($"id", $"sz", $"rn", $"h")
-            .as[(Long, Int, Int, Long)].collect().toSet
-        val agg = rows(graft.operators.DedupOps
-          .rarestPrefixesAgg(posting, prefixLen))
-        val win = rows(graft.operators.DedupOps
-          .rarestPrefixes(posting, prefixLen))
-        assert(agg === win, s"prefix agg != window at t=$t on $docsList")
-      }
-    }
-  }
 }

@@ -537,6 +537,29 @@ class JobsSpec extends SparkSpec {
     assert(source.fetches === 1)
   }
 
+  test("C1: the first trading day of a calendar opening on a holiday is open") {
+    import graft.operators.CalendarOps
+    val cal = CalendarOps.applyHolidays(CalendarOps.calendarDim(spark, 2025, 2025),
+      Seq("2025-01-01").toDF("locdate"), "locdate")
+    val layout = freshLayout()
+    val ledger = new PartitionLedger(layout.root + "/ledger.tsv")
+    // serves the one kr_etf fixture day's payload for any date
+    val kr = new KrEtfConnector(fixture("kr_etf"))
+    val source = new CountingConnector(new Connector {
+      val name = kr.name
+      def fetchRaw(logicalDate: String): Seq[String] = kr.fetchRaw("2025-01-06")
+      def toBronze(spark: SparkSession, raw: Seq[String]): DataFrame = kr.toBronze(spark, raw)
+    })
+    val job = new IngestJob(spark, layout, source, ledger, calendar = Some(cal))
+    assert(job.runFor("2025-01-01") === Skipped("2025-01-01 is a market holiday"))
+    assert(source.fetches === 0)
+    // Thursday 2025-01-02 has no working day before it in this calendar
+    assert(job.previousWorkingDay("2025-01-02") === None)
+    assert(job.runFor("2025-01-02") === Ran)
+    assert(source.fetches === 1)
+    assert(ledger.isProcessed("kr_etf", "2025-01-02"))
+  }
+
   test("S21 kr_etf_old: distinct output payload parses; empty output raises") {
     val c = new KrEtfOldConnector(fixture("kr_etf_old"))
     // the deprecated payload shape: {"output": [...]} — not items/pages
