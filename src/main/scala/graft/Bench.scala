@@ -1,5 +1,6 @@
 package graft
 import graft.core.GraftSession
+import scala.util.control.NonFatal
 
 /** Bench main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Results go to the `noop` sink — unlike
@@ -21,8 +22,9 @@ object Bench {
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // branch-pinning affordance for scaling studies: export
-    // SPARK_GRAFT_DENSE_CUTOFF=0 (always prefix) or a huge value (always
-    // dense) to pin the cost-based dedup kernels' branch for a run
+    // SPARK_GRAFT_DENSE_CUTOFF=0 (always prefix) or its largest accepted
+    // value, 2147483645 (always dense), to pin the cost-based dedup
+    // kernels' branch for a run; a larger value fails the first dedup query
     sys.env.get("SPARK_GRAFT_DENSE_CUTOFF").foreach(v =>
       spark.conf.set("spark.graft.dedup.denseCutoff", v))
 
@@ -34,7 +36,7 @@ object Bench {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
           .linesIterator.next().take(200) }
@@ -115,7 +117,7 @@ object Bench {
     // foreign dataset (the narrower variant of the clobber incident above)
     def canon(s: String): String =
       try new java.io.File(s.stripSuffix("/")).getCanonicalPath
-      catch { case _: Throwable => s.stripSuffix("/") }
+      catch { case NonFatal(_) => s.stripSuffix("/") }
     def loadPrior(path: String): Map[String, Double] = {
       val p = java.nio.file.Paths.get(path)
       if (!java.nio.file.Files.exists(p)) Map.empty
@@ -187,7 +189,7 @@ object Bench {
           .directory(repoRoot).start()
         val out = scala.io.Source.fromInputStream(p.getInputStream).mkString.trim
         if (p.waitFor() == 0) Some(out) else None
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     val gitJson = gitLine("rev-parse", "HEAD").map { h =>
       val dirty = gitLine("status", "--porcelain").exists(_.nonEmpty)
       s""","git_head":${jstr(h)},"git_dirty":$dirty"""

@@ -1,6 +1,7 @@
 package graft
 import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Plan-capture tool for the optimization rounds: writes
   * `.explain("formatted")` output for each named registry query to
@@ -29,7 +30,7 @@ object PlanDump {
           org.apache.spark.sql.execution.FormattedMode)
         Files.write(Paths.get(s"$outDir/$n.txt"), txt.getBytes("UTF-8"))
         System.err.println(s"[plandump] wrote $outDir/$n.txt")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[plandump] $n failed: ${e.getMessage}")
       }
     }

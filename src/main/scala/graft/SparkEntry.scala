@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -43,7 +44,8 @@ object SparkEntry {
     * failure becomes a sentinel oracle: a SELECT whose single
     * `dynamic_oracle_error` column can never match the real result, so
     * the driver's correctness artifact records a loud FAIL naming the
-    * query, with the builder's exception in the row itself. */
+    * query, with the builder's exception in the row itself. Fatal errors
+    * and interrupts are not a builder's failure: they propagate. */
   def dynamicOracleSql(spark: SparkSession, dir: String): Map[String, String] =
     dynamicOracleSqlFor(registry, spark, dir)
 
@@ -51,7 +53,7 @@ object SparkEntry {
                                          dir: String): Map[String, String] =
     qs.flatMap(q => q.oracleFor.map { f =>
       q.name -> (try f(spark, dir) catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           val msg = (e.getClass.getSimpleName + ": " +
             Option(e.getMessage).getOrElse("").linesIterator.mkString(" "))
             .take(300).replace("'", "''")

@@ -13,6 +13,11 @@ import org.apache.spark.sql.SparkSession
   * `shuffle.partitions` defaults to the local core count; on a real
   * cluster this is overridden to ~2-3× total executor cores and AQE
   * coalesces down.
+  *
+  * `spark.sql.codegen.cache.maxEntries` is static and JVM-wide: Spark's
+  * generated-class cache is sized once, when `CodeGenerator` first
+  * initializes, so the value holds only when this builder makes the JVM's
+  * first session — `getOrCreate` on an existing session ignores it.
   */
 object GraftSession {
   /** `SPARK_GRAFT_CPUS` parsed: a positive integer as given, the JVM's
@@ -48,5 +53,11 @@ object GraftSession {
       // selective-join runtime bloom prefilter (the engine-level twin of
       // DedupOps.bloomDeltaNew) — plan-asserted in PlanQualitySpec
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      // a registry sweep needs ~2,900 generated classes, which the default
+      // 100 recompiled every pass; 4096 holds them (metaspace 219 vs 223 MB)
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // events.ts of the TESTDATA.md tables is TIMESTAMP(NANOS); read it as
+      // raw nanos longs in every read (Tables.normalizeTs converts them)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 }

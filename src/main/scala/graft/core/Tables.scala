@@ -22,9 +22,11 @@ final case class Tables(spark: SparkSession, dir: String) {
   def orders: DataFrame = t("orders")
   def lineitem: DataFrame = t("lineitem")
   /** The driver testdata's `events.ts` is parquet TIMESTAMP(NANOS), which
-    * Spark's vectorized reader rejects; read it as raw nanos (legacy flag)
-    * and convert to TimestampType by integer-dividing to micros — the same
-    * truncation DuckDB applies, so oracle comparisons agree to the
+    * Spark's vectorized reader rejects; read it as raw nanos (the legacy
+    * `nanosAsLong` flag, which [[GraftSession.builder]] sets for every
+    * read, so no read's posture depends on query order) and convert to
+    * TimestampType by integer-dividing to micros — the same truncation
+    * DuckDB applies, so oracle comparisons agree to the
     * microsecond. Dispatch on the ACTUAL footer type rather than assuming:
     * a standard TIMESTAMP(MICROS) events table (e.g. anything DuckDB or
     * Spark itself wrote, like the sf1 headroom copy) reads through
@@ -34,10 +36,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * normalize to TimestampType — the session tz is pinned UTC at every
     * entry point, so the NTZ→instant cast is exact, not wall-clock
     * guesswork. */
-  def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Tables.normalizeTs(t("events"))
-  }
+  def events: DataFrame = Tables.normalizeTs(t("events"))
   def documents: DataFrame = t("documents")
   def embeddings: DataFrame = t("embeddings")
 

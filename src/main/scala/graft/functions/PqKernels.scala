@@ -37,6 +37,25 @@ object PqKernels {
     }
     out
   }
+
+  /** The decoders' precondition: exactly `m` codes, none null, each in
+    * `0 until k`. A null slot would decode whatever bytes it holds and an
+    * out-of-range code would index another subspace's codeword (or past
+    * the codebook), so bad input fails here, naming the kernel. Called by
+    * the interpreted and the generated path alike. */
+  def checkCodes(kernel: String, codes: ArrayData, m: Int, k: Int): Unit = {
+    if (codes.numElements() != m) throw new IllegalArgumentException(
+      s"$kernel: expected $m codes, got ${codes.numElements()}")
+    var s = 0
+    while (s < m) {
+      if (codes.isNullAt(s))
+        throw new IllegalArgumentException(s"$kernel: code $s is null")
+      val c = codes.getInt(s)
+      if (c < 0 || c >= k) throw new IllegalArgumentException(
+        s"$kernel: code $s is $c, outside 0..${k - 1}")
+      s += 1
+    }
+  }
 }
 
 /** PQ encode: for each of `m` contiguous subspaces of `sub` dims, the
@@ -198,8 +217,9 @@ object AdcSumKernel {
   * arithmetic, so the result is bit-identical to the
   * flatten/transform/element_at HOF chain it replaces (r15 — that chain
   * was interpreted per ROW, and the gates evaluate it per corpus×query
-  * pair in the brute-force reconstruction legs). Input `array<int>` of m;
-  * output `array<double>` of m·sub. */
+  * pair in the brute-force reconstruction legs). Input `array<int>` of m
+  * codes in `0 until k` ([[PqKernels.checkCodes]]); output
+  * `array<double>` of m·sub. */
 case class PqDecodeKernel(child: Expression, cb: Array[Double], m: Int,
                           k: Int, sub: Int)
     extends UnaryExpression {
@@ -214,6 +234,7 @@ case class PqDecodeKernel(child: Expression, cb: Array[Double], m: Int,
 
   override def nullSafeEval(input: Any): Any = {
     val codes = input.asInstanceOf[ArrayData]
+    PqKernels.checkCodes("PqDecodeKernel", codes, m, k)
     val out = new Array[Double](m * sub)
     var s = 0
     while (s < m) {
@@ -229,6 +250,7 @@ case class PqDecodeKernel(child: Expression, cb: Array[Double], m: Int,
       val out = ctx.freshName("out")
       val s = ctx.freshName("s")
       s"""
+         |graft.functions.PqKernels.checkCodes("PqDecodeKernel", $codes, $m, $k);
          |double[] $out = new double[${m * sub}];
          |for (int $s = 0; $s < $m; $s++) {
          |  System.arraycopy($cbRef, ($s * $k + $codes.getInt($s)) * $sub,
@@ -255,7 +277,8 @@ object PqDecodeKernel {
   * Identical element order and IEEE adds to the
   * `zip_with(base, pqDecode(codes), (a, b) => a + b)` HOF it replaces
   * (r15 — interpreted per corpus row in the ivfpq gate's recon leg).
-  * `base` is `array<double>` of m·sub; output likewise. */
+  * `base` is `array<double>` of m·sub, `codes` as for [[PqDecodeKernel]];
+  * output `array<double>` of m·sub. */
 case class PqReconstructKernel(left: Expression, right: Expression,
                                cb: Array[Double], m: Int, k: Int, sub: Int)
     extends BinaryExpression {
@@ -275,6 +298,7 @@ case class PqReconstructKernel(left: Expression, right: Expression,
   override def nullSafeEval(a: Any, b: Any): Any = {
     val base = a.asInstanceOf[ArrayData]
     val codes = b.asInstanceOf[ArrayData]
+    PqKernels.checkCodes("PqReconstructKernel", codes, m, k)
     val out = new Array[Double](m * sub)
     var s = 0
     while (s < m) {
@@ -297,6 +321,7 @@ case class PqReconstructKernel(left: Expression, right: Expression,
       val s = ctx.freshName("s"); val j = ctx.freshName("j")
       val off = ctx.freshName("off"); val voff = ctx.freshName("voff")
       s"""
+         |graft.functions.PqKernels.checkCodes("PqReconstructKernel", $codes, $m, $k);
          |double[] $out = new double[${m * sub}];
          |for (int $s = 0; $s < $m; $s++) {
          |  int $off = ($s * $k + $codes.getInt($s)) * $sub;

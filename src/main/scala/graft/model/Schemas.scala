@@ -153,17 +153,3 @@ object Schemas {
     StructField("updated_at", TimestampType)))
 }
 
-/** Typed views at API boundaries (SURVEY §1.2): the fixed silver dims. */
-final case class DimCalendar(
-    date: java.sql.Date, year: Int, quarter: Int, quarter_id: String,
-    month_num: Int, month_id: String, month_name: String,
-    day_of_month: Int, day_of_week: Int, day_name: String,
-    is_market_holiday: Boolean)
-
-final case class DimIndustryCode(
-    item_code: String, item_name: String, industry_code: String,
-    market: String, issue_date: java.sql.Date)
-
-final case class Ohlcv(
-    date: java.sql.Date, ticker: String, open: Double, high: Double,
-    low: Double, close: Double, volume: Long)

@@ -211,8 +211,7 @@ object DedupOps {
     // sort rows, the one-box sf10 ceiling). Above the cutoff the blocked
     // cogroup verify keeps pair rows 16 bytes end to end. Both paths are
     // property-tested identical, so this is purely a cost decision.
-    val verifyCutoff = docs.sparkSession.conf
-      .get("spark.graft.dedup.verifyJoinCutoff", "100000").toLong
+    val verifyCutoff = verifyJoinCutoff(docs)
     val n = if (nDocs >= 0L) nDocs
             else boundedCount(docs, idCol, verifyCutoff)
     if (n < verifyCutoff) verifyCandidatesJoin(candidates, sets, threshold)
@@ -224,11 +223,29 @@ object DedupOps {
     * comparing the result against any bound ≤ cutoff is EXACT while the
     * probe never pays a full O(N) pass — at 100 TB the r14 form's
     * `docs.count()` was one extra full scan per query purely to pick a
-    * branch (VERDICT r14 "what's wrong" #3). Returns min(N, cutoff + 1). */
+    * branch (VERDICT r14 "what's wrong" #3). Returns min(N, cutoff + 1).
+    * The cutoff is a checked one ([[checkedCutoff]]), so `cutoff + 1`
+    * fits the Int a `limit` takes. */
   private def boundedCount(docs: DataFrame, idCol: String,
-                           cutoff: Long): Long = {
-    val bound = math.min(cutoff + 1, Int.MaxValue.toLong - 1).toInt
-    docs.select(col(idCol)).limit(bound).count()
+                           cutoff: Long): Long =
+    docs.select(col(idCol)).limit((cutoff + 1).toInt).count()
+
+  /** The largest cutoff [[boundedCount]] compares exactly: its probe
+    * counts `cutoff + 1` rows with an Int `limit`. */
+  private val MaxCutoff = Int.MaxValue - 2L
+
+  /** A cutoff outside `0..MaxCutoff` fails fast, naming its source: a
+    * clamped probe would misclassify corpora at or above the clamp, and
+    * `cutoff + 1` overflows at `Long.MaxValue`. */
+  private def checkedCutoff(name: String, v: Long): Long = {
+    if (v < 0 || v > MaxCutoff) throw new IllegalArgumentException(
+      s"$name must be in 0..$MaxCutoff, got $v")
+    v
+  }
+
+  private def verifyJoinCutoff(docs: DataFrame): Long = {
+    val key = "spark.graft.dedup.verifyJoinCutoff"
+    checkedCutoff(key, docs.sparkSession.conf.get(key, "100000").toLong)
   }
 
   /** Attach-join verify: join the full encoded arrays to each candidate
@@ -362,8 +379,7 @@ object DedupOps {
                        threshold: Double,
                        denseCutoff: Long = -1L): DataFrame = {
     val dense = resolveDenseCutoff(docs, denseCutoff)
-    val verifyCutoff = docs.sparkSession.conf
-      .get("spark.graft.dedup.verifyJoinCutoff", "100000").toLong
+    val verifyCutoff = verifyJoinCutoff(docs)
     // one bounded probe serves BOTH downstream decisions (dense/prefix and
     // verify-join/cogroup): min(N, maxCutoff+1) compares exactly against
     // every bound ≤ maxCutoff
@@ -377,11 +393,14 @@ object DedupOps {
     * an explicit cutoff to pin a branch (the branch-invariance property
     * tests do), everyone else inherits `spark.graft.dedup.denseCutoff`
     * (default 10000, the measured crossover) — so a bench run can pin
-    * either branch with `--conf`, no recompile. */
+    * either branch with `--conf`, no recompile. Either source is checked
+    * against `0..MaxCutoff`. */
   private def resolveDenseCutoff(docs: DataFrame, explicit: Long): Long =
-    if (explicit >= 0) explicit
-    else docs.sparkSession.conf
-      .get("spark.graft.dedup.denseCutoff", "10000").toLong
+    if (explicit >= 0) checkedCutoff("denseCutoff", explicit)
+    else {
+      val key = "spark.graft.dedup.denseCutoff"
+      checkedCutoff(key, docs.sparkSession.conf.get(key, "10000").toLong)
+    }
 
   /** Exact substring-level duplication profile (the suffix-array-style
     * dedup signal of RefinedWeb/Lee et al. 2022, re-expressed relationally

@@ -15,6 +15,8 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "4096",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.shuffle.partitions" -> "4")
     expected.foreach { case (k, v) =>
       assert(spark.conf.get(k).equalsIgnoreCase(v), s"$k = ${spark.conf.get(k)}")

@@ -178,7 +178,7 @@ class PropertySpec extends SparkSpec {
         // the cost-based picker is branch-invariant: forcing either side
         // of the cutoff changes the plan, never the answer
         val autoDense = pairs(graft.operators.DedupOps
-          .jaccardPairsAuto(df, "doc_id", "sh", t, denseCutoff = Long.MaxValue))
+          .jaccardPairsAuto(df, "doc_id", "sh", t, denseCutoff = Int.MaxValue - 2L))
         val autoPp = pairs(graft.operators.DedupOps
           .jaccardPairsAuto(df, "doc_id", "sh", t, denseCutoff = 0L))
         assert(autoDense === dense && autoPp === dense)

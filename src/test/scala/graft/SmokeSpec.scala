@@ -51,5 +51,10 @@ class SmokeSpec extends SparkSpec {
     assert(out("fake_dyn").contains("IllegalStateException"))
     assert(out("fake_dyn").contains("codebook fit failed second line"))
     assert(!out("fake_dyn").contains("\n"))
+    // only NonFatal failures become the sentinel: an interrupt propagates
+    val interrupted = graft.queries.Q("fake_int", (_, _) => spark.emptyDataFrame,
+      None, oracleFor = Some((_, _) => throw new InterruptedException("cancelled")))
+    intercept[InterruptedException](
+      SparkEntry.dynamicOracleSqlFor(Seq(ok, interrupted), spark, "/nope"))
   }
 }

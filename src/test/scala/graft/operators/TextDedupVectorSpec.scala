@@ -481,6 +481,30 @@ class DedupOpsSpec extends SparkSpec {
     assert(out(0).getAs[Double]("jaccard") === 0.5)
   }
 
+  test("cost-based dispatch: a cutoff outside 0..Int.MaxValue-2 fails fast, naming its source") {
+    val docs = Seq((1L, Seq("a b", "b c")), (2L, Seq("a b", "b d"))).toDF("doc_id", "sh")
+    val max = Int.MaxValue - 2L
+    // the largest accepted cutoff still pins the dense branch (jaccard 1/3)
+    assert(DedupOps.jaccardPairsAuto(docs, "doc_id", "sh", 0.3, denseCutoff = max)
+      .count() === 1L)
+    for (bad <- Seq(max + 1, Long.MaxValue)) {
+      val e = intercept[IllegalArgumentException](
+        DedupOps.containmentPairsAuto(docs, "doc_id", "sh", 0.3, denseCutoff = bad))
+      assert(e.getMessage.contains("denseCutoff") && e.getMessage.contains(bad.toString),
+        e.getMessage)
+    }
+    for ((key, bad) <- Seq("spark.graft.dedup.denseCutoff" -> (max + 1).toString,
+                           "spark.graft.dedup.verifyJoinCutoff" -> Long.MaxValue.toString,
+                           "spark.graft.dedup.verifyJoinCutoff" -> "-1")) {
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          DedupOps.jaccardPairsAuto(docs, "doc_id", "sh", 0.3))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(bad), e.getMessage)
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("LSH candidates contain every pair the exact Jaccard path confirms") {
     // real documents at sf0.001: LSH(4x4) over minhash(16) must recall all
     // pairs with true jaccard >= 0.8 that the exact inverted-index finds

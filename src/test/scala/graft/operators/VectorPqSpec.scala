@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Product-quantization math contract ([[VectorOps.pqTrainCodebooks]] /
@@ -142,5 +143,55 @@ class VectorPqSpec extends SparkSpec {
       got.zip(exact).foreach { case (g, x) =>
         assert(math.abs(g - x) <= 1e-5, s"query $qid: ADC $g vs exact $x") }
     }
+  }
+
+  // m = 2 subspaces of k = 2 codewords of 2 dims
+  private val tiny = Seq(Seq(Seq(1.0, 2.0), Seq(3.0, 4.0)), Seq(Seq(5.0, 6.0), Seq(7.0, 8.0)))
+  private val kernels: Seq[(String, Column => Column)] = Seq(
+    "PqDecodeKernel" -> (c => VectorOps.pqDecode(c, tiny)),
+    "PqReconstructKernel" ->
+      (c => VectorOps.pqReconstruct(array(Seq.fill(4)(lit(0.5)): _*), c, tiny)))
+
+  /** A kernel over one row's `codes`, under whole-stage generated code or
+    * the interpreted `nullSafeEval` path. The codes are computed from
+    * `spark.range`, so neither constant folding nor a local relation
+    * evaluates them at plan time. */
+  private def decode(kernel: Column => Column, codes: Column,
+                     codegen: Boolean): Seq[Double] = {
+    val confs = Seq("spark.sql.codegen.wholeStage" -> codegen.toString,
+      "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"))
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try spark.range(1).select(kernel(codes)).as[Seq[Double]].head()
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  private def rejects(codes: Column, expected: String): Unit =
+    for ((name, kernel) <- kernels; codegen <- Seq(true, false)) {
+      val e = intercept[Exception](decode(kernel, codes, codegen))
+      val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case c: IllegalArgumentException => c.getMessage }
+      assert(cause.exists(m => m.contains(name) && m.contains(expected)),
+        s"$name, codegen=$codegen: $e")
+    }
+
+  test("PQ decode kernels: valid codes decode on both paths (control)") {
+    val codes = array(($"id" + 1).cast("int"), $"id".cast("int"))
+    for (codegen <- Seq(true, false)) {
+      assert(decode(kernels(0)._2, codes, codegen) === Seq(3.0, 4.0, 5.0, 6.0))
+      assert(decode(kernels(1)._2, codes, codegen) === Seq(3.5, 4.5, 5.5, 6.5))
+    }
+  }
+
+  test("PQ decode kernels reject a code array of the wrong length") {
+    rejects(array($"id".cast("int")), "expected 2 codes, got 1")
+  }
+
+  test("PQ decode kernels reject a null code") {
+    rejects(array($"id".cast("int"), when($"id" > 0, 1).cast("int")), "code 1 is null")
+  }
+
+  test("PQ decode kernels reject a code outside 0 until k") {
+    rejects(array($"id".cast("int"), ($"id" + 2).cast("int")), "code 1 is 2, outside 0..1")
+    rejects(array(($"id" - 1).cast("int"), $"id".cast("int")), "code 0 is -1, outside 0..1")
   }
 }
