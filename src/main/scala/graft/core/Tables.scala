@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Accessors for the driver test tables (TESTDATA.md / FIXTURES.md §B).
   *
@@ -8,11 +10,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * column pruning and filter pushdown per query — at 100 TB these become
   * partitioned catalog tables and the same plans get partition pruning
   * for free. Never cache here: caching would pin columns the query
-  * doesn't need and defeat pruning.
+  * doesn't need and defeat pruning. Every scan goes through
+  * [[Tables.parquet]], so opening a table runs no Spark job once its
+  * schema is known to the session.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Tables.parquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame = t("region")
   def nation: DataFrame = t("nation")
@@ -49,6 +53,48 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+  /** Leaf files under a path: (path, length, modification time), sorted. */
+  private type FileState = Seq[(String, Long, Long)]
+
+  /** Inferred schemas per session, then per path. Sessions are weak keys
+    * compared by identity (as in `IngestJob.decisions`): inference reads
+    * session confs such as `nanosAsLong`, so one session's answer is not
+    * another's. */
+  private val inferred = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, (FileState, StructType)]]())
+
+  private def fileState(spark: SparkSession, path: String): FileState = {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    files.result().sorted
+  }
+
+  /** A parquet scan of `path` with its schema given, so opening it runs no
+    * Spark job. The schema Spark infers from the footers (one job) is
+    * memoized per session under the path and the sorted (path, length,
+    * modification time) of every leaf file beneath it. Any rewrite, append
+    * or deletion changes that state, and the next open infers again, so
+    * the memo never serves a stale schema; the check costs one file
+    * listing per open. Only the schema is kept: data is never cached, so
+    * pruning and pushdown are those of a plain read. Concurrent opens of
+    * one path infer once. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val state = fileState(spark, path)
+    val (_, schema) = inferred
+      .computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+      .compute(path, (_, known) =>
+        if (known != null && known._1 == state) known
+        else (state, spark.read.parquet(path).schema))
+    spark.read.schema(schema).parquet(path)
+  }
+
   /** Normalize an events-shaped frame's `ts` to TimestampType regardless
     * of how the writer encoded it (see the [[Tables.events]] Scaladoc):
     * raw nanos longs (legacy nanosAsLong read of TIMESTAMP(NANOS)) are

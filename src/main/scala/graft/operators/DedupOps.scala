@@ -792,7 +792,12 @@ object DedupOps {
     * partially- or fully-written segment is unreferenced garbage swept
     * by the next write's GC, and the prior generation stays live. Since
     * a batch is one maintenance operation with one ledger mark, its
-    * all-or-nothing re-run is exactly what the idempotency story wants. */
+    * all-or-nothing re-run is exactly what the idempotency story wants.
+    *
+    * The segment writes run under one job group of their own. When one
+    * fails, the group's running and not-yet-started jobs are cancelled and
+    * the pool is drained before the failure propagates, so no write of the
+    * batch outlives the call (a retry's GC would otherwise race it). */
   def writeBandedIndexIncrements(increments: Seq[DataFrame], idCol: String,
       sigCol: String, bands: Int, rowsPerBand: Int, path: String,
       filesPerBand: Int = 8, append: Boolean = false): Unit = {
@@ -804,24 +809,34 @@ object DedupOps {
     val prior = latestManifest(fs, base)
     val gen0 = prior.map(_.maxSeenGen).getOrElse(0)
     val segs = increments.indices.map(i => segName(gen0 + i + 1))
+    val sc = spark.sparkContext
+    val group = s"graft-banded-index-${java.util.UUID.randomUUID}"
     val pool = java.util.concurrent.Executors
       .newFixedThreadPool(math.min(4, increments.size))
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val writes = increments.zip(segs).map { case (inc, seg) =>
-        scala.concurrent.Future {
-          bandedPostings(inc, idCol, sigCol, bands, rowsPerBand)
-            .repartitionByRange(col("band"), col("bucket"))
-            .sortWithinPartitions(col("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("band")
-            .parquet(new org.apache.hadoop.fs.Path(base, seg).toString)
-        }
-      }
-      writes.foreach(f => scala.concurrent.Await.result(
-        f, scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
+    val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
+    val writes = increments.zip(segs).map { case (inc, seg) =>
+      scala.concurrent.Future {
+        sc.setJobGroup(group, s"banded index segment $seg")
+        bandedPostings(inc, idCol, sigCol, bands, rowsPerBand)
+          .repartitionByRange(col("band"), col("bucket"))
+          .sortWithinPartitions(col("bucket"))
+          .write.mode("overwrite")
+          .partitionBy("band")
+          .parquet(new org.apache.hadoop.fs.Path(base, seg).toString)
+      }(ec)
+    }
+    pool.shutdown() // queued writes still run; the threads exit after them
+    // fails as soon as any write fails (Future.sequence fails fast); its
+    // callbacks run on the completing thread, since the pool takes no more
+    implicit val callbacks: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.parasitic
+    val all = scala.concurrent.Future.sequence(writes)
+    try scala.concurrent.Await.result(all, scala.concurrent.duration.Duration.Inf)
+    catch { case e: Throwable =>
+      sc.cancelJobGroupAndFutureJobs(group)
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+      throw e
+    }
     // ordered generation publishes — byte-identical manifest chain to the
     // sequential flow; only the LAST generation survives the final GC,
     // exactly as it does after N sequential appends
@@ -993,8 +1008,10 @@ object DedupOps {
       throw new IllegalStateException(s"no committed banded index at $path"))
     // one scan per segment, unioned: each segment is its own partition-
     // discovery root (multi-root discovery rejects sibling roots), and
-    // Catalyst pushes probe filters through the Union into every scan
-    m.segments.map(s => spark.read.parquet(
+    // Catalyst pushes probe filters through the Union into every scan.
+    // Segments are immutable, so after its first read a segment's schema
+    // comes from the session memo and opening it runs no footer job.
+    m.segments.map(s => graft.core.Tables.parquet(spark,
         new org.apache.hadoop.fs.Path(base, s).toString))
       .reduce(_ unionByName _)
   }

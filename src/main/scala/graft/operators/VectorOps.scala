@@ -205,8 +205,12 @@ object VectorOps {
     // key (cluster, min(bx,by), max(bx,by)): parallelism k·B(B+1)/2, at the
     // cost of B× row replication. Diagonal cells dedupe by id order; the
     // off-diagonal output is id-normalized (cos is symmetric).
+    // The merge hint pins the sort-merge join: left to AQE, the join turns
+    // into a broadcast whose build side is whichever of the two near-equal
+    // shuffles finishes first, so the plan and its generated classes would
+    // differ from run to run.
     val lhs = v.withColumn("bj",
-      explode(sequence(col("blk"), lit(blocks - 1))))
+      explode(sequence(col("blk"), lit(blocks - 1)))).hint("merge")
     val rhs = v.withColumn("bi",
       explode(sequence(lit(0), col("blk"))))
     lhs.as("a").join(rhs.as("b"),

@@ -394,4 +394,65 @@ class BandedIndexSpec extends SparkSpec {
       batch, "doc_id", "sig", 4, 4).as[(Long, Long)].collect().toSet
     assert(probeSet(idx, batch) === mem)
   }
+
+  test("a failing increment cancels the batch's other segment writes: no " +
+       "job of the batch is still running when the call returns") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val idx = java.nio.file.Files.createTempDirectory("graft-bidx-fault").toString
+    BatchFault.slowStarted = new java.util.concurrent.CountDownLatch(2)
+    BatchFault.slowUntil = System.nanoTime + 60L * 1000000000L
+    // a slow write holds its task until Spark kills it (or 60 s pass); the
+    // failing write throws once both slow writes are running
+    val slow = udf { (_: Long) =>
+      BatchFault.slowStarted.countDown()
+      val ctx = org.apache.spark.TaskContext.get()
+      while (!ctx.isInterrupted() && System.nanoTime < BatchFault.slowUntil)
+        Thread.sleep(20)
+      true
+    }
+    val failing = udf((_: Long) => BatchFault.failOnceSlowStarted())
+    val sc = spark.sparkContext
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    val t0 = System.nanoTime
+    try {
+      val e = intercept[Exception] {
+        DedupOps.writeBandedIndexIncrements(Seq(
+            signed.filter(slow($"doc_id")), signed.filter(failing($"doc_id")),
+            signed.filter(slow($"doc_id"))),
+          "doc_id", "sig", 4, 4, idx)
+      }
+      val returnedAfter = (System.nanoTime - t0) / 1e9
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("injected segment-write failure")), e)
+      assert(returnedAfter < 30, s"the call returned after $returnedAfter s: it " +
+        "waited for the slow writes instead of cancelling them")
+      // job-end events trail the failure the caller sees by a few
+      // microseconds; a write left running stays active for a minute
+      val deadline = System.nanoTime + 5L * 1000000000L
+      def running = { org.apache.spark.ListenerBusDrain(sc); started.asScala.toSet -- ended.asScala }
+      while (running.nonEmpty && System.nanoTime < deadline) Thread.sleep(50)
+      assert(started.size >= 3, s"jobs started: $started")
+      assert(running.isEmpty, s"jobs still running after the call returned: $running")
+    } finally sc.removeSparkListener(listener)
+    // nothing of the batch is committed
+    assert(DedupOps.liveSegments(spark, idx) === Nil)
+  }
+}
+
+/** Rendezvous between the slow and the failing writes of the fault spec
+  * (tasks run in the test JVM under `local[n]`). */
+private object BatchFault {
+  @volatile var slowStarted = new java.util.concurrent.CountDownLatch(0)
+  @volatile var slowUntil = 0L
+
+  def failOnceSlowStarted(): Boolean = {
+    slowStarted.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    throw new IllegalStateException("injected segment-write failure")
+  }
 }
