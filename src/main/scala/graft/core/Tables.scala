@@ -56,13 +56,25 @@ object Tables {
   /** Leaf files under a path: (path, length, modification time), sorted. */
   private type FileState = Seq[(String, Long, Long)]
 
+  /** The schema of one path at one file state, inferred on first use.
+    * Inference locks only this entry, so concurrent opens of one path run
+    * one inference job and opens of other paths never wait for it. It
+    * holds no session: a value that did would keep its weak key alive. */
+  private final class Inferred(val state: FileState) {
+    private var known: StructType = null
+    def schema(spark: SparkSession, path: String): StructType = synchronized {
+      if (known == null) known = spark.read.parquet(path).schema
+      known
+    }
+  }
+
   /** Inferred schemas per session, then per path. Sessions are weak keys
     * compared by identity (as in `IngestJob.decisions`): inference reads
     * session confs such as `nanosAsLong`, so one session's answer is not
     * another's. */
   private val inferred = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, (FileState, StructType)]]())
+      java.util.concurrent.ConcurrentHashMap[String, Inferred]]())
 
   private def fileState(spark: SparkSession, path: String): FileState = {
     val p = new Path(path)
@@ -87,12 +99,15 @@ object Tables {
     * one path infer once. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     val state = fileState(spark, path)
-    val (_, schema) = inferred
+    val memo = inferred
       .computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
-      .compute(path, (_, known) =>
-        if (known != null && known._1 == state) known
-        else (state, spark.read.parquet(path).schema))
-    spark.read.schema(schema).parquet(path)
+    val known = memo.get(path) // a warm open skips compute and its bin lock
+    val entry =
+      if (known != null && known.state == state) known
+      else memo.compute(path, (_, cur) =>
+        if (cur != null && cur.state == state) cur
+        else new Inferred(state))
+    spark.read.schema(entry.schema(spark, path)).parquet(path)
   }
 
   /** Normalize an events-shaped frame's `ts` to TimestampType regardless

@@ -1008,10 +1008,8 @@ object DedupOps {
       throw new IllegalStateException(s"no committed banded index at $path"))
     // one scan per segment, unioned: each segment is its own partition-
     // discovery root (multi-root discovery rejects sibling roots), and
-    // Catalyst pushes probe filters through the Union into every scan.
-    // Segments are immutable, so after its first read a segment's schema
-    // comes from the session memo and opening it runs no footer job.
-    m.segments.map(s => graft.core.Tables.parquet(spark,
+    // Catalyst pushes probe filters through the Union into every scan
+    m.segments.map(s => spark.read.parquet(
         new org.apache.hadoop.fs.Path(base, s).toString))
       .reduce(_ unionByName _)
   }

@@ -35,7 +35,8 @@ class CodegenCacheSpec extends SparkSpec {
     assert(warm > 100, s"the warm pass compiled only $warm classes, within " +
       "Spark's default cache of 100: the second pass would witness nothing")
     // Every plan of the list is the same on each run (sim_semdedup_pairs
-    // pins its pair join to sort-merge), so a second pass meets only
+    // pins its pair join to sort-merge; PlanQualitySpec checks its final
+    // plan over 10 runs), so a second pass meets only
     // classes the warm pass compiled. A cache that thrashes recompiles
     // ~98% of them.
     val again = compiledByOnePass()

@@ -710,4 +710,42 @@ class PlanQualitySpec extends SparkSpec {
       s"the fence must sit between the final sort and the O(n^2) kernel " +
         s"so range-sampling re-reads shuffle blocks, not the join:\n$plan")
   }
+
+  test("sim_semdedup_pairs runs one final plan every time: its pair join " +
+       "stays sort-merge") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, HashJoin}
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // the triangle-blocked pair join is the one join keyed on `bj`
+    def pairJoins(plan: SparkPlan): Seq[String] = aqe.collect(plan) {
+      case j: BaseJoinExec
+          if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "bj")) =>
+        j match {
+          case h: HashJoin => s"${j.nodeName} ${h.buildSide}"
+          case _ => j.nodeName
+        }
+    }
+    def normalized(plan: SparkPlan): String = plan.toString
+      .replaceAll("#\\d+", "#").replaceAll("\\[plan_id=\\d+\\]", "")
+    val q = SparkEntry.queries("sim_semdedup_pairs")
+    // AQE re-plans a join once its shuffles have run; left to it, this
+    // join became a broadcast built from whichever near-equal side
+    // finished first, which differed from run to run
+    val runs = (1 to 10).map { _ =>
+      val df = q(spark, TestSpark.sfDir)
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      val plan = df.queryExecution.executedPlan
+      (pairJoins(plan), normalized(plan), rows)
+    }
+    assert(runs.map(_._3).distinct.size === 1, "rows differ between runs")
+    assert(runs.head._3.nonEmpty, "no pair passed the threshold: vacuous")
+    val joins = runs.map(_._1).distinct
+    assert(joins === Seq(Seq("SortMergeJoin")),
+      s"final pair joins over ${runs.size} runs: $joins")
+    val plans = runs.map(_._2).distinct
+    assert(plans.size === 1,
+      s"${plans.size} distinct final plans over ${runs.size} runs:\n" +
+        plans.mkString("\n----\n"))
+  }
 }

@@ -59,6 +59,29 @@ class TablesSpec extends SparkSpec {
     assert(jobsIn(Tables.parquet(spark, copy)) === 0)
   }
 
+  test("concurrent first opens of one path run one inference job") {
+    val path = Files.createTempDirectory("graft-tables").resolve("nation.parquet").toString
+    Tables(spark, TestSpark.sfDir).nation.write.parquet(path)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val schemas = new java.util.concurrent.ConcurrentLinkedQueue[StructType]
+    val jobs = jobsIn {
+      // threads made here inherit the job group jobsIn set
+      val openers = (1 to 4).map { _ =>
+        val th = new Thread(() => {
+          gate.await()
+          schemas.add(Tables.parquet(spark, path).schema)
+        })
+        th.start()
+        th
+      }
+      gate.countDown()
+      openers.foreach(_.join())
+    }
+    assert(schemas.size === 4)
+    assert(schemas.asScala.toSet === Set(spark.read.parquet(path).schema))
+    assert(jobs === 1, s"$jobs inference jobs for 4 concurrent first opens")
+  }
+
   test("a table overwritten in place with a new schema is opened as it is now") {
     val path = Files.createTempDirectory("graft-tables").resolve("t.parquet").toString
     Seq(1, 2, 3).toDF("a").write.parquet(path)
