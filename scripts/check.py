@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's t2 correctness gate: run graft.Verify
 first (sbt "runMain graft.Verify <sfDir> <outDir>"), then this script
-compares each query's parquet output against its DuckDB oracle.
+compares each query's parquet output against its DuckDB oracle. It also
+runs the detcast audit and its ceiling self-test (and, against an sf1
+data dir, the ceiling boundary test); any failure exits non-zero.
 
 Usage: python3 scripts/check.py [sfDir] [outDir]
 """
@@ -51,14 +53,14 @@ QUERY_PRAGMAS = {
 # longer holds and a value divergence is EXPECTED, so fail before wasting
 # the sweep (the r11 gini class, pre-discovered). SF parsed from the data
 # dir name (…/sf3 → 3).
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+QUERY_SOURCES = sorted(glob.glob(f"{REPO}/src/main/scala/graft/queries/*.scala"))
 if TIMEOUT > 0:
     m = re.search(r"sf([0-9]*\.?[0-9]+)$", os.path.basename(sf.rstrip("/")))
     if m:
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         r = subprocess.run(
-            [sys.executable, os.path.join(repo, "scripts", "detcast.py"),
-             "--sf", m.group(1)]
-            + sorted(glob.glob(f"{repo}/src/main/scala/graft/queries/*.scala")))
+            [sys.executable, os.path.join(REPO, "scripts", "detcast.py"),
+             "--sf", m.group(1)] + QUERY_SOURCES)
         if r.returncode != 0:
             sys.exit(f"[check] detcast ceiling audit FAILED at sf{m.group(1)} "
                      "— an adjudicated bound does not hold at this sweep SF; "
@@ -66,6 +68,27 @@ if TIMEOUT > 0:
     else:
         print(f"[check] WARNING: cannot parse an SF out of '{sf}' — "
               "detcast ceiling audit skipped")
+
+# Code checks, every run: the gate-mode detcast audit (every sum()->DOUBLE
+# site in the query SQL is string-routed or adjudicated bounded) and the
+# self-test of its ceiling machinery; against an sf1 data dir also the
+# boundary test, which measures each ceiling's placement on that dataset.
+code_checks = [
+    ("detcast", [os.path.join(REPO, "scripts", "detcast.py")] + QUERY_SOURCES),
+    ("ceiling self-test", [os.path.join(REPO, "scripts", "test_detcast_ceilings.py")]),
+]
+if os.path.basename(sf.rstrip("/")) == "sf1":
+    code_checks.append(("ceiling boundary",
+                        [os.path.join(REPO, "scripts", "test_ceiling_boundary.py"), sf]))
+code_fails = []
+for label, cmd in code_checks:
+    r = subprocess.run([sys.executable] + cmd, capture_output=True, text=True)
+    if r.returncode != 0:
+        code_fails.append(label)
+        print(f"[check] {label} FAILED:\n" + (r.stdout + r.stderr).strip()[-2000:])
+    else:
+        print(f"OK {label}: " + r.stdout.strip().splitlines()[-1])
+
 for p in glob.glob(f"{sf}/*.parquet"):
     name = os.path.basename(p)[:-8]
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
@@ -200,4 +223,4 @@ if os.environ.get("GRAFT_CHECK_JSON"):
                    "oracle_timeout": len(timeouts), "non_run": len(non_runs),
                    "fail": len(fails),
                    "queries": dict(sorted(entries.items()))}, f, indent=1)
-sys.exit(1 if fails or non_runs else 0)
+sys.exit(1 if fails or non_runs or code_fails else 0)

@@ -20,7 +20,7 @@ MACHINE-CHECKED numeric SF ceiling (the 4th tuple element; None = the
 bound does not scale with SF). A sweep at SF >= an entry's ceiling
 disables that entry, so the audit fails loud BEFORE the sweep would
 discover the divergence the hard way (the r11 gini class, automated).
-New unsafe sites fail the close gate until routed or adjudicated here.
+New unsafe sites fail scripts/check.py until routed or adjudicated here.
 
 Usage: python3 scripts/detcast.py [--sf N] src/main/scala/graft/queries/*.scala
   --sf N   audit for a sweep at scale factor N: allow entries whose

@@ -10,7 +10,7 @@ ceiling of sf1, that:
   4. every real ALLOW / IMPLICIT_ALLOW entry is a 4-tuple whose ceiling
      is None or a positive number (the data shape check.py relies on).
 
-Run standalone or via close_gate. Exit 0 = all green.
+Run standalone or via scripts/check.py. Exit 0 = all green.
 """
 import importlib.util
 import os

@@ -61,11 +61,8 @@ object SparkEntry {
       })
     }).toMap
 
-  /** Headline queries timed by Bench. */
-  def headline: Seq[Q] = registry.filter(_.headline)
-
   /** Verification-gate queries (in-plan invariant checks): Bench reports
-    * their cost in a separate subtotal — the headline number should
+    * their cost in a separate subtotal — the deployed total should
     * reflect deployed paths, not deliberate brute-force identity gates. */
   def gateNames: Set[String] = registry.filter(_.gate).map(_.name).toSet
 }

@@ -34,9 +34,9 @@ import graft.sources._
   * are ledger-skipped (no write), silver/calendar/gold re-runs are
   * idempotent overwrites. [[snapshot]] hashes every output table
   * (minus the F2 audit stamps, which record load time BY DESIGN) so the
-  * equality is checked on content, not on wishful thinking. Timed as a
-  * committed artifact by [[graft.PlatformE2E]]; spec'd in
-  * PlatformE2ESpec. */
+  * equality is checked on content, not on wishful thinking. Spec'd in
+  * PlatformE2ESpec; `PlatformRun.stageSec` carries its per-stage
+  * timings. */
 object PlatformDay {
 
   /** The fixture fleet's one fully-populated trading day. */

@@ -131,8 +131,7 @@ object DedupQueries {
         .repartition(s.sparkContext.defaultParallelism)
         .orderBy($"id_a", $"id_b")
     },
-    Some(exactJaccardOracle(0.5)),
-    headline = true)
+    Some(exactJaccardOracle(0.5)))
 
   /** PPJoin prefix-filtered set-similarity join — the 100 TB candidate
     * generator (DedupOps.jaccardPairs), checked against the SAME exact-
@@ -154,8 +153,7 @@ object DedupQueries {
       DedupOps.jaccardPairs(withShingles, "doc_id", "shingles", 0.9)
         .orderBy($"id_a", $"id_b")
     },
-    Some(exactJaccardOracle(0.9)),
-    headline = true)
+    Some(exactJaccardOracle(0.9)))
 
   /** Naive inverted-index candidate pairs over word-5-gram shingles — the
     * third candidate-generation regime: selective postings (5-gram df ≤ 4
@@ -263,8 +261,7 @@ object DedupQueries {
          |WHERE len(list_intersect(sa.s, sb.s))::DOUBLE
          |      / len(list_distinct(list_concat(sa.s, sb.s))) >= 0.8
          |ORDER BY id_a, id_b""".stripMargin
-    },
-    headline = true)
+    })
 
   /** Per-doc 64-bit SimHash + near-dup pairs at hamming ≤ 3. Pairing is a
     * band join on the hash's 4 × 16-bit bands: ≤ 3 differing bits can

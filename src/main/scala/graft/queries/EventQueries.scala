@@ -38,8 +38,7 @@ object EventQueries {
     Some("""SELECT strftime(time_bucket(INTERVAL 1 HOUR, ts), '%Y-%m-%d %H:%M:%S')
            |         AS window_start,
            |       event_type, count(*) AS n, (sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) / 1e2) AS sum_value
-           |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin),
-    headline = true)
+           |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin))
 
   private val sliding = Q(
     "events_sliding_1h_30m",
@@ -164,8 +163,7 @@ object EventQueries {
            |       strftime(v.ts, '%Y-%m-%d %H:%M:%S') AS last_view_ts,
            |       (floor((v.view_value) * 1e2 + 0.5) / 1e2) AS last_view_value
            |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
-           |ORDER BY p.event_id""".stripMargin),
-    headline = true)
+           |ORDER BY p.event_id""".stripMargin))
 
   /** Gold analytics (SURVEY §7.6 backtesting shapes): per-user event-value
     * returns (lag) and 5-row moving average. Outputs are scaled integers
@@ -202,8 +200,7 @@ object EventQueries {
            |  avg(value_c2) OVER
            |    (PARTITION BY user_id ORDER BY ts, event_id
            |     ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS ma5_c2
-           |FROM base ORDER BY event_id""".stripMargin),
-    headline = true)
+           |FROM base ORDER BY event_id""".stripMargin))
 
   /** SCD Type-2 dimension history: each user's event_type change log,
     * runs of identical values collapsed, half-open validity intervals

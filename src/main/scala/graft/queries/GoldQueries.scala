@@ -136,8 +136,7 @@ object GoldQueries {
          |SELECT lang, source, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars
          |FROM exact_kept WHERE doc_id NOT IN (SELECT doc_id FROM losers)
          |GROUP BY lang, source ORDER BY lang, source""".stripMargin
-    },
-    headline = true)
+    })
 
   /** Range join: error events assigned to the same user's session
     * intervals (intervals derived as min/max ts per (user, session) with a

@@ -69,8 +69,7 @@ object HygieneQueries {
     Some(s"""WITH $trigramCteBody
             |SELECT p.doc_id, b.bench_id, count(*) AS n_hits
             |FROM post3 p JOIN bench3 b ON p.sh = b.sh AND p.doc_id <> b.bench_id
-            |GROUP BY 1, 2 ORDER BY doc_id, bench_id""".stripMargin),
-    headline = true)
+            |GROUP BY 1, 2 ORDER BY doc_id, bench_id""".stripMargin))
 
   /** Span-level decontamination: same fixture benchmark (every 50th doc)
     * and word-3-grams as text_decontaminate, but the EXCISION policy —
@@ -316,8 +315,7 @@ object HygieneQueries {
             |FROM surv GROUP BY lang, split
             |UNION ALL
             |SELECT '~unconverged', '~', -1, -1 FROM converged WHERE n_moved > 0
-            |ORDER BY lang, split""".stripMargin),
-    headline = true)
+            |ORDER BY lang, split""".stripMargin))
 
   /** DSIR-style importance resampling toward the English slice: hashed
     * unigram buckets → add-one-smoothed target/raw distributions → per-doc

@@ -63,8 +63,7 @@ object RelationalQueries {
            |FROM lineitem
            |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
            |GROUP BY l_returnflag, l_linestatus
-           |ORDER BY l_returnflag, l_linestatus""".stripMargin),
-    headline = true)
+           |ORDER BY l_returnflag, l_linestatus""".stripMargin))
 
   // --- Joins ------------------------------------------------------------
 
@@ -96,8 +95,7 @@ object RelationalQueries {
            |JOIN customer ON o_custkey = c_custkey
            |GROUP BY l_orderkey, o_orderdate, c_mktsegment
            |ORDER BY revenue DESC, l_orderkey
-           |LIMIT 10""".stripMargin),
-    headline = true)
+           |LIMIT 10""".stripMargin))
 
   /** Fact ⋈ three dims; dims explicitly broadcast (at 100 TB the fact side
     * shuffles once for the groupBy, dims never shuffle). */
@@ -123,8 +121,7 @@ object RelationalQueries {
            |JOIN nation ON s_nationkey = n_nationkey
            |JOIN region ON n_regionkey = r_regionkey
            |GROUP BY r_name
-           |ORDER BY r_name""".stripMargin),
-    headline = true)
+           |ORDER BY r_name""".stripMargin))
 
   /** S3: ticker-universe lookup — dim keys + market→suffix map literal
     * (yfinance_operator.py:60-82, suffix map at :17), as a broadcast join
@@ -206,8 +203,7 @@ object RelationalQueries {
            |FROM lineitem l1
            |WHERE l_quantity < (SELECT 0.5 * avg(l_quantity)
            |                    FROM lineitem l2
-           |                    WHERE l2.l_partkey = l1.l_partkey)""".stripMargin),
-    headline = true)
+           |                    WHERE l2.l_partkey = l1.l_partkey)""".stripMargin))
 
   // --- Calendar / working day (F3, F6, F7, F18) -------------------------
 

@@ -35,9 +35,7 @@ object StatsQueries {
            |       (CAST(CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS STRING) AS DOUBLE) / 1e2) AS revenue, count(*) AS n
            |FROM orders JOIN customer ON o_custkey = c_custkey
            |GROUP BY ROLLUP (c_mktsegment, o_orderstatus)
-           |ORDER BY segment, status""".stripMargin),
-    // exactness-rewrite cost pinned: 1.5x rerun trigger (NOTES_r10 §1)
-    headline = true)
+           |ORDER BY segment, status""".stripMargin))
 
   private val dispersion = Q(
     "stats_dispersion",
@@ -81,9 +79,7 @@ object StatsQueries {
            |       (floor(sqrt(a / (cnt * (cnt - 1)) / 1e4) * 1e4 + 0.5) / 1e4) AS sd_price,
            |       (floor(a / (cnt * (cnt - 1)) / 1e4 * 1e4 + 0.5) / 1e4) AS var_price,
            |       min_price, max_price
-           |FROM mo ORDER BY l_returnflag""".stripMargin),
-    // exactness-rewrite cost pinned: 1.5x rerun trigger (NOTES_r10 §1)
-    headline = true)
+           |FROM mo ORDER BY l_returnflag""".stripMargin))
 
   /** Exact interpolated percentiles via the `percentile` aggregate — the
     * MEASURED-cheapest exact form at every tested SF (NOTES_r14.md,
@@ -224,9 +220,7 @@ object StatsQueries {
            |       coalesce(o_orderpriority, 'ALL') AS priority,
            |       count(*) AS n
            |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-           |ORDER BY status, priority""".stripMargin),
-    // exactness-rewrite cost pinned: 1.5x rerun trigger (NOTES_r10 §1)
-    headline = true)
+           |ORDER BY status, priority""".stripMargin))
 
   /** Explicit GROUPING SETS (beyond rollup/cube): chosen set list with
     * grouping_id disambiguating which dimensions are aggregated-out —
@@ -299,9 +293,7 @@ object StatsQueries {
            |         (PARTITION BY user_id ORDER BY epoch_us(ts)
            |          RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) / 1e2)
            |         AS trailing_1h_sum
-           |FROM events ORDER BY event_id""".stripMargin),
-    // exactness-rewrite cost pinned: 1.5x rerun trigger (NOTES_r10 §1)
-    headline = true)
+           |FROM events ORDER BY event_id""".stripMargin))
 
   /** Equal-width histogram with data-driven bounds: the (min, max) row is
     * a one-row aggregate broadcast-cross-joined into the binning scan (no
@@ -402,9 +394,7 @@ object StatsQueries {
            |    sqrt(CAST(CAST(n * sdd - sd * sd AS STRING) AS DOUBLE) *
            |         CAST(CAST(n * stt - st * st AS STRING) AS DOUBLE))) * 1e4 + 0.5) / 1e4)
            |    AS corr_disc_tax
-           |FROM mo ORDER BY l_returnflag""".stripMargin),
-    // exactness-rewrite cost pinned: 1.5x rerun trigger (NOTES_r10 §1)
-    headline = true)
+           |FROM mo ORDER BY l_returnflag""".stripMargin))
 
   /** Heavy hitters via count-min sketch, gated by invariant oracle: the
     * exact top-10 token counts (hash-checked) carry two in-plan booleans —

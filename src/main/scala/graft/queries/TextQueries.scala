@@ -71,8 +71,7 @@ object TextQueries {
            |  (floor((least(n::DOUBLE/500.0, 1.0)*0.5
            |        + (1.0 - least(punct_ratio*5.0, 1.0))*0.3
            |        + least(stopword_ratio*4.0, 1.0)*0.2) * 1e6 + 0.5) / 1e6) AS quality
-           |FROM m ORDER BY doc_id""".stripMargin),
-    headline = true)
+           |FROM m ORDER BY doc_id""".stripMargin))
 
   private val langIdQ = Q(
     "text_lang_id",

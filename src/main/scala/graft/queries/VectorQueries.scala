@@ -83,8 +83,7 @@ object VectorQueries {
             |  SELECT *, (row_number() OVER
             |    (PARTITION BY query_id ORDER BY cos DESC, neighbor_id))::INT rank
             |  FROM scored)
-            |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin),
-    headline = true)
+            |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin))
 
   /** Exact all-pairs threshold query — the O(N²) correctness baseline the
     * LSH variant below is judged against; never the 100 TB path. */

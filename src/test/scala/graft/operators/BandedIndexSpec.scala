@@ -435,7 +435,7 @@ class BandedIndexSpec extends SparkSpec {
       // job-end events trail the failure the caller sees by a few
       // microseconds; a write left running stays active for a minute
       val deadline = System.nanoTime + 5L * 1000000000L
-      def running = { org.apache.spark.ListenerBusDrain(sc); started.asScala.toSet -- ended.asScala }
+      def running = { org.apache.spark.sql.graft.bridge.drainListenerBus(sc); started.asScala.toSet -- ended.asScala }
       while (running.nonEmpty && System.nanoTime < deadline) Thread.sleep(50)
       assert(started.size >= 3, s"jobs started: $started")
       assert(running.isEmpty, s"jobs still running after the call returned: $running")

@@ -482,7 +482,7 @@ class JobsSpec extends SparkSpec {
     try body
     finally {
       sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
+      org.apache.spark.sql.graft.bridge.drainListenerBus(sc)
       sc.removeSparkListener(listener)
     }
     started.get
