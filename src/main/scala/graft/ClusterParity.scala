@@ -19,8 +19,12 @@ import org.apache.spark.sql.SparkSession
   * Equality is over the canonicalized result: sorted `toJSON` lines,
   * md5-folded — textual JSON makes double bit-inequality visible.
   * Prints one table line per query and exits nonzero on any mismatch.
-  * Usage: `sbt "runMain graft.ClusterParity [query...]"`
-  * (SPARK_GRAFT_SF_DIR selects the data, default sf0.01). */
+  * Usage: `SPARK_SCALA_VERSION=2.13 sbt "runMain graft.ClusterParity [query...]"`
+  * (SPARK_GRAFT_SF_DIR selects the data, default sf0.01). Against a binary
+  * Spark distribution the variable is required: without it Spark's
+  * launcher looks for `launcher/target/scala-*` under `SPARK_HOME` and
+  * every executor fails with "Cannot find any build directories". The
+  * workers write executor logs under `SPARK_HOME/work`. */
 object ClusterParity {
   val defaultQueries: Seq[String] = Seq(
     "sim_topk_aggregator",    // custom TopK Aggregator

@@ -18,6 +18,18 @@ import org.apache.spark.sql.SparkSession
   * generated-class cache is sized once, when `CodeGenerator` first
   * initializes, so the value holds only when this builder makes the JVM's
   * first session — `getOrCreate` on an existing session ignores it.
+  *
+  * `file:` paths open through [[graft.io.NioLocalFileSystem]]: without the
+  * native `libhadoop`, stock `LocalFileSystem` forks a `chmod` per
+  * directory and file it creates (14 for a two-task partitioned write),
+  * while NIO sets the same mode in-process. Unset, `file:` resolves
+  * by classpath order to hive-exec's `ProxyLocalFileSystem`, whose only
+  * change is a `rename` that returns false onto an existing file; graft
+  * assumes plain `LocalFileSystem` rename (`DedupOps.publishManifest`
+  * says why). Hadoop's `FileSystem.CACHE` is JVM-wide and keyed by
+  * scheme, authority and user, not by conf, so like the class cache above
+  * this holds only when a session from this builder creates the JVM's
+  * first `file:` file system.
   */
 object GraftSession {
   /** `SPARK_GRAFT_CPUS` parsed: a positive integer as given, the JVM's
@@ -59,5 +71,7 @@ object GraftSession {
       // events.ts of the TESTDATA.md tables is TIMESTAMP(NANOS); read it as
       // raw nanos longs in every read (Tables.normalizeTs converts them)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // every local write sets its modes through NIO, not a forked chmod
+      .config("spark.hadoop.fs.file.impl", "graft.io.NioLocalFileSystem")
       .config("spark.ui.enabled", "false")
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -76,15 +76,19 @@ object Tables {
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, Inferred]]())
 
+  /** Walked with `getFileStatus`/`listStatus`, not `listFiles`: its
+    * `LocatedFileStatus` reads each file's owner and permissions, which
+    * without `libhadoop` forks an `ls -ld` per leaf file (Spark's own
+    * listing builds that status with null permissions for the same
+    * reason). */
   private def fileState(spark: SparkSession, path: String): FileState = {
     val p = new Path(path)
-    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listFiles(p, true)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = Seq.newBuilder[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
+    def walk(f: FileStatus): Unit =
+      if (f.isDirectory) fs.listStatus(f.getPath).foreach(walk)
+      else files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    walk(fs.getFileStatus(p))
     files.result().sorted
   }
 

@@ -17,6 +17,7 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.codegen.cache.maxEntries" -> "4096",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.hadoop.fs.file.impl" -> "graft.io.NioLocalFileSystem",
       "spark.sql.shuffle.partitions" -> "4")
     expected.foreach { case (k, v) =>
       assert(spark.conf.get(k).equalsIgnoreCase(v), s"$k = ${spark.conf.get(k)}")
