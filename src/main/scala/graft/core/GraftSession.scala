@@ -30,6 +30,16 @@ import org.apache.spark.sql.SparkSession
   * scheme, authority and user, not by conf, so like the class cache above
   * this holds only when a session from this builder creates the JVM's
   * first `file:` file system.
+  *
+  * Every session runs [[SmallSortInPlace]], an AQE runtime rule: a global
+  * sort whose input is all materialized query stages, with no `Generate`
+  * above them, and whose estimated size is at most what
+  * `CoalesceShufflePartitions` folds into one partition
+  * (`coalescePartitions.minPartitionSize` under `parallelismFirst`, else
+  * `advisoryPartitionSizeInBytes`) sorts in place over `coalesce(1)`. Its
+  * range exchange would be read back as one partition anyway, so the rule
+  * drops the `RangePartitioner` sampling job and the shuffle stage and
+  * keeps the one sort task. It reads only AQE's own confs.
   */
 object GraftSession {
   /** `SPARK_GRAFT_CPUS` parsed: a positive integer as given, the JVM's
@@ -74,4 +84,5 @@ object GraftSession {
       // every local write sets its modes through NIO, not a forked chmod
       .config("spark.hadoop.fs.file.impl", "graft.io.NioLocalFileSystem")
       .config("spark.ui.enabled", "false")
+      .withExtensions(_.injectRuntimeOptimizerRule(_ => SmallSortInPlace))
 }

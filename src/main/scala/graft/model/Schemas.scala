@@ -142,6 +142,25 @@ object Schemas {
       StructField("list_total_count", LongType),
       StructField("row", ArrayType(bokStat)))))))
 
+  /** Silver dim_calendar as `CalendarJob` writes it: the data columns of
+    * `CalendarOps.calendarDim` plus the audit stamps, then the `year`
+    * partition column, all nullable — the schema a parquet read of the
+    * table infers. */
+  val dimCalendar: StructType = StructType(Seq(
+    StructField("date", DateType),
+    StructField("quarter", IntegerType),
+    StructField("quarter_id", StringType),
+    StructField("month_num", IntegerType),
+    StructField("month_id", StringType),
+    StructField("month_name", StringType),
+    StructField("day_of_month", IntegerType),
+    StructField("day_of_week", IntegerType),
+    StructField("day_name", StringType),
+    StructField("is_market_holiday", BooleanType),
+    StructField("created_at", TimestampType),
+    StructField("updated_at", TimestampType),
+    StructField("year", IntegerType)))
+
   /** Silver dim_industry_code (industry_code_glue_job.py:98). */
   val dimIndustryCode: StructType = StructType(Seq(
     StructField("item_code", StringType),

@@ -60,10 +60,16 @@ object CalendarOps {
         dayofweek($"date").isin(1, 7).as("is_market_holiday"))
   }
 
-  /** F2: audit-column append (industry_code_glue_job.py:49-51). */
-  def withAudit(df: DataFrame): DataFrame =
-    df.withColumn("created_at", current_timestamp())
-      .withColumn("updated_at", current_timestamp())
+  /** F2: audit-column append (industry_code_glue_job.py:49-51). Both
+    * stamps are one `TIMESTAMP` instant, taken once per call. It enters the
+    * plan through a nondeterministic UDF, which generated code holds as a
+    * reference object: `current_timestamp()` folds into a literal that
+    * codegen inlines, so every run compiled its classes afresh. */
+  def withAudit(df: DataFrame): DataFrame = {
+    val now = java.time.Instant.now()
+    val stamp = udf(() => now).asNondeterministic().asNonNullable()
+    df.withColumn("created_at", stamp()).withColumn("updated_at", stamp())
+  }
 
   /** F6, window form: previous non-holiday date strictly before each date.
     * A running `max(case when working then date end)` over date order —

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 import graft.io.{Layout, PartitionLedger, SchemaRegistry, Writers}
+import graft.model.Schemas
 import graft.operators.CalendarOps
 import graft.sources.{Connector, Retry}
 
@@ -240,5 +241,7 @@ final class CalendarJob(spark: SparkSession, layout: Layout) {
       Ran
     } catch { case NonFatal(e) => Failed(e) }
 
-  def read(): DataFrame = spark.read.parquet(path)
+  /** The table under its declared schema: no inference job, which would
+    * run on every read, because each run rewrites the table. */
+  def read(): DataFrame = spark.read.schema(Schemas.dimCalendar).parquet(path)
 }

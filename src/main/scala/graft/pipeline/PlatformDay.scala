@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.{Layout, PartitionLedger, SchemaRegistry, Writers}
+import graft.model.Schemas
 import graft.operators.CalendarOps
 import graft.sources._
 
@@ -105,7 +106,7 @@ object PlatformDay {
 
   def calendarHolidaysApplied(spark: SparkSession, layout: Layout,
                               job: CalendarJob): DataFrame = {
-    val holidays = spark.read.json(
+    val holidays = spark.read.schema(Schemas.holidayRecord).json(
       layout.source("bronze", "kr_market_holiday") + s"/ymd=$HolidayYear")
     CalendarOps.applyHolidays(job.read(), holidays, "calnd_dd_dy")
   }

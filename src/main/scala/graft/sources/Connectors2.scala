@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DateType, DoubleType, StructField, StructType}
 import graft.model.Schemas
 import graft.operators.RelationalOps
 
@@ -345,8 +345,18 @@ final class ExchangeRateConnector(fixtureDir: String) extends Connector {
   val name = "exchange_rate"
   def fetchRaw(logicalDate: String): Seq[String] =
     FixtureFiles.listDir(s"$fixtureDir/ymd=$logicalDate", "")
-  def toBronze(spark: SparkSession, raw: Seq[String]): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(raw: _*)
+  /** `RecordDate DATE`, then one `DOUBLE` per pair column, named by the
+    * first file's CSV header line: no inference pass over the data. */
+  def toBronze(spark: SparkSession, raw: Seq[String]): DataFrame = {
+    val in = java.nio.file.Files.newBufferedReader(java.nio.file.Paths.get(raw.head))
+    val header = try Option(in.readLine()).getOrElse("") finally in.close()
+    val names = header.split(",", -1).toSeq
+    require(names.head == "RecordDate",
+      s"exchange_rate header must start with RecordDate, got '$header'")
+    val schema = StructType(StructField("RecordDate", DateType) +:
+      names.tail.map(StructField(_, DoubleType)))
+    spark.read.schema(schema).option("header", "true").csv(raw: _*)
+  }
 
   /** Silver shape: unpivot the pair columns to (RecordDate, pair, rate). */
   def toLong(bronze: DataFrame): DataFrame = {

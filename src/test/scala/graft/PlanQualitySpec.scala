@@ -748,4 +748,38 @@ class PlanQualitySpec extends SparkSpec {
       s"${plans.size} distinct final plans over ${runs.size} runs:\n" +
         plans.mkString("\n----\n"))
   }
+
+  test("a small global sort sorts in place: q1's final plan has no range " +
+       "exchange, a sort over a Generate keeps it") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{CoalesceExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // the final adaptive plan (query stages included), after AQE
+    // re-optimized with the stages' sizes
+    def finalPlan(df: org.apache.spark.sql.DataFrame): SparkPlan = {
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+    def ranges(p: SparkPlan) = aqe.collect(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    def has(p: SparkPlan, f: SparkPlan => Boolean) = aqe.find(p)(f).isDefined
+    val q1 = finalPlan(SparkEntry.queries("q1_pricing_summary")(spark, TestSpark.sfDir))
+    assert(ranges(q1).isEmpty && has(q1, _.isInstanceOf[CoalesceExec]),
+      s"q1's four-row sort must run over coalesce(1), with no range " +
+        s"sampling job or shuffle:\n$q1")
+    // a Generate multiplies rows beyond Spark's size estimate: the same
+    // small aggregate keeps its range exchange once an explode sits above it
+    val agg = Tables(spark, TestSpark.sfDir).orders
+      .groupBy($"o_orderstatus").agg(count(lit(1)).as("n"))
+    val plain = finalPlan(agg.orderBy($"n"))
+    assert(ranges(plain).isEmpty, plain)
+    val exploded = finalPlan(agg
+      .select($"o_orderstatus", explode(array(lit(1), lit(2))).as("k"))
+      .orderBy($"o_orderstatus", $"k"))
+    assert(has(exploded, _.isInstanceOf[GenerateExec]) && ranges(exploded).size == 1,
+      s"a sort above a Generate must keep its range exchange:\n$exploded")
+  }
 }

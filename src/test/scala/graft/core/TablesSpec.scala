@@ -16,29 +16,6 @@ import graft.{SparkSpec, TestSpark}
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Spark jobs that `body` starts on this thread, counted once the
-    * listener bus has delivered every event. */
-  private def jobsIn(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"tables-${java.util.UUID.randomUUID}"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.sql.graft.bridge.drainListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    started.get
-  }
-
   private def opens(t: Tables): Seq[(String, () => DataFrame)] = Seq(
     "region" -> (() => t.region), "nation" -> (() => t.nation),
     "customer" -> (() => t.customer), "supplier" -> (() => t.supplier),

@@ -251,8 +251,19 @@ class Connectors2Spec extends SparkSpec {
   }
 
   test("S13 FX: wide matrix reads; silver unpivots to long (F4/F15)") {
+    import org.apache.spark.sql.types.{DateType, DoubleType, StructField, StructType}
     val c = new ExchangeRateConnector(fixture("exchange_rate"))
-    val wide = c.toBronze(spark, c.fetchRaw("2025-01-06"))
+    val raw = c.fetchRaw("2025-01-06")
+    var wide: org.apache.spark.sql.DataFrame = null
+    // the schema comes from the header line, not from an inference job
+    assert(jobsIn { wide = c.toBronze(spark, raw) } === 0)
+    assert(wide.schema === StructType(StructField("RecordDate", DateType) +:
+      Seq("USDKRW=X", "EURKRW=X", "JPYKRW=X", "GBPUSD=X").map(StructField(_, DoubleType))))
+    // ... the schema and rows an inferring read gives
+    val inferred = spark.read.option("header", "true").option("inferSchema", "true")
+      .csv(raw: _*)
+    assert(wide.schema === inferred.schema)
+    assert(wide.toJSON.collect().toSeq === inferred.toJSON.collect().toSeq)
     assert(wide.columns.head === "RecordDate") // F15 rename already applied
     assert(wide.columns.length === 5)
     val long = c.toLong(wide)

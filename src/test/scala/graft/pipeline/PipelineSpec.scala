@@ -465,29 +465,6 @@ class JobsSpec extends SparkSpec {
     assert(!ledger.isProcessed("faulty", "2025-01-06"))
   }
 
-  /** Spark jobs that `body` starts on this thread, counted once the
-    * listener bus has delivered every event. */
-  private def jobsIn(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID}"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.sql.graft.bridge.drainListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    started.get
-  }
-
   test("C1 once per calendar: 13 ingests decide once, a decided daily runFor is one Spark job") {
     val cal = graft.operators.CalendarOps.calendarDim(spark, 2025, 2025)
     val jobs = (1 to 13).map { _ =>
@@ -635,6 +612,29 @@ class JobsSpec extends SparkSpec {
     assert(spark.table("dim_industry_code").count() === 4)
   }
 
+  test("E2 audit stamps compile once: a second silver run compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.types.TimestampType
+    val layout = freshLayout()
+    val ledger = new PartitionLedger(layout.root + "/ledger.tsv")
+    assert(new IngestJob(spark, layout, new KrxCodesConnector(fixture("krx_codes")),
+      ledger).runFor("2025-01-06") === Ran)
+    val silver = new SilverIndustryCodeJob(spark, layout,
+      new SchemaRegistry(layout.root + "/registry"))
+    // a stamp inlined into generated code made every run compile 4 classes
+    assert(silver.runFor("2025-01-06") === Ran)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(silver.runFor("2025-01-06") === Ran)
+    val again = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(again === 0, s"the second silver run compiled $again classes")
+    val out = spark.read.parquet(
+      layout.source("silver", "industry_code") + "/dim_industry_code")
+    assert(out.schema("created_at").dataType === TimestampType)
+    assert(out.schema("updated_at").dataType === TimestampType)
+    assert(out.filter($"created_at".isNull || $"created_at" =!= $"updated_at")
+      .count() === 0, "one write stamps one instant")
+  }
+
   test("S17 sensor: poke interval + timeout + reschedule semantics") {
     // virtual clock: `sleep` advances time, nothing blocks — the
     // reschedule-mode analog (the waiting slot is the injected sleep)
@@ -729,5 +729,27 @@ class JobsSpec extends SparkSpec {
     val cal = job.read()
     assert(cal.filter($"year" === 2025).count() === 365)
     assert(cal.count() === 365)
+  }
+
+  test("E3 calendar leg reads dim_calendar and the holidays under declared " +
+       "schemas: the inferred table, and no Spark job") {
+    val layout = freshLayout()
+    new Runner(spark, layout, new PartitionLedger(layout.root + "/ledger.tsv"))
+      .ingestAll(Seq(new MarketHolidayConnector(fixture("kr_market_holiday"))),
+        PlatformDay.HolidayYear)
+    val job = new CalendarJob(spark, layout)
+    assert(job.runFor(PlatformDay.HolidayYear.toInt - 2) === Ran)
+    var cal: DataFrame = null
+    val jobs = jobsIn {
+      cal = PlatformDay.calendarHolidaysApplied(spark, layout, job)
+      job.read()
+    }
+    assert(jobs === 0, s"the calendar leg's reads started $jobs Spark jobs")
+    val inferred = spark.read.parquet(job.path)
+    assert(Schemas.dimCalendar === inferred.schema)
+    assert(job.read().exceptAll(inferred).isEmpty && inferred.exceptAll(job.read()).isEmpty)
+    // the declared holiday read still finds the fixture's holidays
+    assert(cal.filter($"date" === "2025-01-28").select($"is_market_holiday")
+      .as[Boolean].head())
   }
 }
